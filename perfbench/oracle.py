@@ -5,7 +5,8 @@ order-insensitive digest of the collected rows at full float precision,
 against the query's DuckDB twin (``Query.oracle``) run over the same
 Parquet files. The digests are cached in ``digests.json`` beside the data,
 keyed by the oracle SQL text and the data files' hashes;
-``python3 perfbench/oracle.py --remake`` computes them again.
+``python3 perfbench/oracle.py --remake`` computes them, and the ETL
+export's expectation below, again.
 
 The ETL export is checked from what it wrote: DuckDB reads the JSONL
 collections and the hive-partitioned Parquet back and compares row counts
@@ -206,6 +207,29 @@ def etl_expected(csv_path: str) -> dict:
         con.close()
 
 
+def etl_expected_cached(data_dir: str, remake: bool = False) -> dict:
+    """``etl_expected`` of the data set's CSV, cached in
+    ``etl_expected.json`` beside it. The cache is keyed, like the tile
+    digests, by the code that computes it (this module's source, which
+    holds ``CSV_FACTS_SQL``) and by the CSV's hash."""
+    import inspect
+
+    csv = os.path.join(data_dir, "clearvue.csv")
+    path = os.path.join(data_dir, "etl_expected.json")
+    src = inspect.getsource(sys.modules[__name__])
+    key = hashlib.sha256((src + "\n" + _file_sha(csv)).encode()).hexdigest()[:16]
+    if os.path.exists(path) and not remake:
+        with open(path) as f:
+            cached = json.load(f)
+        if cached.get("key") == key:
+            return cached["want"]
+    want = etl_expected(csv)
+    with open(path + ".tmp", "w") as f:
+        json.dump({"key": key, "want": want}, f, indent=1, sort_keys=True)
+    os.replace(path + ".tmp", path)
+    return want
+
+
 #: The PNG file signature.
 PNG_SIGNATURE = b"\x89PNG\r\n\x1a\n"
 
@@ -294,7 +318,8 @@ def check_png(head: bytes, size: tuple[int, int]) -> list[str]:
 
 
 def main(argv: list[str]) -> int:
-    """``--remake``: recompute the cached digests of the default data set."""
+    """``--remake``: recompute the cached tile digests and the ETL
+    export's expectation for the default data set."""
     import workloads
 
     if argv != ["--remake"]:
@@ -303,6 +328,8 @@ def main(argv: list[str]) -> int:
     data_dir = workloads.ensure_data()
     got = tile_digests(data_dir, workloads.oracles(), remake=True)
     print(f"{len(got)} digests written to {os.path.join(data_dir, 'digests.json')}")
+    etl_expected_cached(data_dir, remake=True)
+    print(f"ETL expectation written to {os.path.join(data_dir, 'etl_expected.json')}")
     return 0
 
 

@@ -6,8 +6,9 @@ On the small data set (``scale=0.1``: the sf0.001 shapes, 6,000 line
 items) each workload runs one pass; every output must pass its check. Then
 each check must reject a perturbed result: one changed value and one
 dropped row in a collected tile, and in the ETL export one changed value
-and one dropped row in the JSONL written, one dropped fact file and one
-changed summary scalar. Exits 0 only if all of that holds.
+and one dropped row in the JSONL written, one dropped fact file, one
+changed summary scalar, and a pass whose export went unchecked because a
+step failed. Exits 0 only if all of that holds.
 """
 
 from __future__ import annotations
@@ -103,7 +104,7 @@ def _etl_cases(res: dict, want: dict, scratch: str) -> list[tuple[str, bool]]:
 def main() -> int:
     data = workloads.ensure_data(SCALE)
     want_tiles = oracle.tile_digests(data, workloads.oracles())
-    want_etl = run.expected_etl(data)
+    want_etl = oracle.etl_expected_cached(data)
     ok = True
     for workload in sorted(workloads.WORKLOADS):
         run_dir = os.path.join(workloads.WORK, f"selftest-{workload}")
@@ -123,6 +124,11 @@ def main() -> int:
             cases = _tile_cases(res, want_tiles)
             if any("etl" in p for p in res["passes"]):
                 cases += _etl_cases(res, want_etl, os.path.join(run_dir, "perturbed"))
+                unchecked = copy.deepcopy(res)
+                for p in unchecked["passes"]:
+                    del p["etl"]
+                cases.append(("etl: a failed step, export unchecked",
+                              bool(run.check(unchecked, want_tiles, want_etl))))
             for label, rejected in cases:
                 print(f"{'PASS' if rejected else 'FAIL'} {workload}: check rejects {label}")
                 ok &= rejected

@@ -6,7 +6,9 @@ public calls; nothing in the program is edited. A traced run records:
 - spans (name, start, end, parent, operation id) around each call into a
   layer: the query build ``fn()``, plan forcing through the Dataset's own
   ``queryExecution`` (which the action then reuses), the action, and each
-  ``sources`` call; kept in memory and written out when the run ends;
+  ``sources`` call (``load_table`` inside query builds, and the ETL's
+  ingest, sink and chart calls); kept in memory and written out when the
+  run ends;
 - py4j gateway commands inside query build, from a wrapper on the connection
   (proxy-release ``m`` commands are left out: Python's GC decides them);
 - Spark jobs, stages and tasks per job group from ``statusTracker``;
@@ -25,6 +27,7 @@ import json
 import os
 import pstats
 import statistics
+import sys
 import time
 
 from workloads import PACKAGE
@@ -78,9 +81,11 @@ class Tracer:
 
     # -- hooks ------------------------------------------------------------
     def install(self, spark) -> None:
-        """Wrap the py4j connection, SessionCache and the calendar dim."""
+        """Wrap the py4j connection, SessionCache, the calendar dim and
+        ``load_table``."""
         from nosql_based_business_intelligence_system_spark import caching
         from nosql_based_business_intelligence_system_spark.functions import fiscal
+        from nosql_based_business_intelligence_system_spark.sources import tables
 
         client = spark.sparkContext._gateway._gateway_client
         send = client.send_command
@@ -116,6 +121,19 @@ class Tracer:
             return dim(*a, **kw)
 
         fiscal.fiscal_calendar_dim = counted_dim
+
+        load = tables.load_table
+
+        def spanned_load(*a, **kw):
+            with tracer.span("sources.tables"):
+                return load(*a, **kw)
+
+        # every package module that bound the name at import, and the
+        # defining module for those that import it later
+        for mod in list(sys.modules.values()):
+            if (getattr(mod, "__name__", "").startswith(PACKAGE)
+                    and getattr(mod, "load_table", None) is load):
+                mod.load_table = spanned_load
 
     def set_group(self, spark, group: str) -> None:
         with self.untimed():
@@ -197,33 +215,18 @@ def parse_event_log(event_log_dir: str) -> dict[str, dict]:
 
 
 def profile_stats(profile: cProfile.Profile) -> dict:
-    """Python self time in the package, call counts per module in
-    ``MODULES``, and time spent inside calls into ``sources``."""
+    """Python self time in the package, and call counts per module in
+    ``MODULES``."""
     stats = pstats.Stats(profile).stats
     pkg_sep = os.sep + PACKAGE + os.sep
-
-    def module_of(filename: str) -> str | None:
-        i = filename.find(pkg_sep)
-        if i < 0:
-            return None
-        rel = filename[i + len(pkg_sep):]
-        return rel[:-3].replace(os.sep, ".") if rel.endswith(".py") else None
-
     self_s = 0.0
     calls = dict.fromkeys(MODULES, 0)
-    sources_s = 0.0
-    for (fname, _line, _fn), (_cc, nc, tt, _ct, callers) in stats.items():
-        mod = module_of(fname)
-        if mod is None:
+    for (fname, _line, _fn), (_cc, nc, tt, _ct, _callers) in stats.items():
+        i = fname.find(pkg_sep)
+        if i < 0 or not fname.endswith(".py"):
             continue
         self_s += tt
+        mod = fname[i + len(pkg_sep):-3].replace(os.sep, ".")
         if mod in calls:
             calls[mod] += nc
-        if mod.startswith("sources."):
-            # time entering sources from outside it (no double count of
-            # sources functions calling each other)
-            for (cfile, _l, _f), (_c, _n, _t, ct) in callers.items():
-                cmod = module_of(cfile)
-                if not (cmod or "").startswith("sources."):
-                    sources_s += ct
-    return {"package_self_s": self_s, "module_calls": calls, "sources_s": sources_s}
+    return {"package_self_s": self_s, "module_calls": calls}

@@ -7,8 +7,10 @@ writes a JSON result file and exits. Sequence:
    resolved (``start_s``);
 2. the cold pass, then steady passes until ``--seconds`` have passed
    (whole passes, at least two);
-3. three session set-ups in the same process (stop the session, then
-   ``get_spark`` and resolve the tables again; ``setup_s`` is their median);
+3. ``SETUPS`` session set-ups in the same process: stop the session, pause,
+   then ``get_spark`` and resolve the tables again. Each records the CPU
+   seconds of the process tree and the wall time; ``setup_s`` is the
+   median CPU figure;
 4. peak RSS of the process tree, then stop everything.
 
 Collected rows are digested after each pass, outside the pass's timer; the
@@ -44,7 +46,10 @@ import procfs  # noqa: E402
 import tracing  # noqa: E402
 import workloads  # noqa: E402
 
-SETUPS = 3
+#: In-process set-ups after the passes; the first ``SETUP_WARMUPS`` are
+#: not counted, since the JIT is still compiling the set-up path then.
+SETUPS = 10
+SETUP_WARMUPS = 2
 MIN_STEADY = 2
 SETTLE_S = 0.2
 
@@ -204,8 +209,10 @@ def main(argv: list[str]) -> int:
     if not a.passes:
         for _ in range(SETUPS):
             spark.stop()
+            time.sleep(SETTLE_S)
+            cpu0 = procfs.tree_cpu_s(me)
             spark, g_s, t_s = _setup(conf, tables, a.data)
-            setups.append(g_s + t_s)
+            setups.append({"cpu_s": procfs.tree_cpu_s(me) - cpu0, "wall_s": g_s + t_s})
     spark.stop()
 
     result = {
@@ -216,7 +223,7 @@ def main(argv: list[str]) -> int:
         "start_s": start_s,
         "get_spark_s": get_spark_s,
         "tables_s": tables_s,
-        "setup_s_samples": setups,
+        "setups": setups[SETUP_WARMUPS:],
         "peak_rss_mb": rss_mb,
         "passes": passes,
         "failed": failed,
