@@ -93,7 +93,9 @@ def _merge_pair(words: DataFrame, a: str, b: str) -> DataFrame:
     # acc = (out, skip, i): i counts input symbols visited so the
     # next-symbol peek indexes the ORIGINAL array correctly even after
     # fusions shrink `out` (current symbol is input position i+1,
-    # 1-based; its successor is i+2).
+    # 1-based; its successor is i+2). Peeking the original array is
+    # correct only because fused output is never re-examined: BPE merges
+    # one pair per round, left to right.
     # F.get (0-based) not element_at: past-the-end peeks on the last
     # symbol must yield NULL, and ANSI-mode element_at throws there.
     nxt = lambda acc: F.get(  # noqa: E731
@@ -158,13 +160,6 @@ def bpe_train(
         merges.append((a, b, n))
         words = _merge_pair(words, a, b).localCheckpoint(eager=False)
     return merges
-
-
-def _fold_syms_err_note() -> None:  # pragma: no cover - doc anchor only
-    """The fold in :func:`_merge_pair` indexes the ORIGINAL ``syms`` via
-    ``element_at(syms, size(out) + 2)`` to peek at the next symbol; this
-    is only correct because fused output is never re-examined (BPE applies
-    one pair per round, left-to-right)."""
 
 
 def bpe_encode(

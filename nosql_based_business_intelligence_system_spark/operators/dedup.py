@@ -4,8 +4,9 @@ Five strategies, cheapest first:
 
 - exact (hash groupBy on content or content-hash)
 - n-gram Jaccard (shingle explode -> shingle-key self-join -> similarity)
-- MinHash + LSH banding (spark.ml MinHashLSH) — the scale path for fuzzy
-  dedup: candidate pairs come from band-bucket joins, not O(n^2)
+- MinHash + LSH banding — the scale path for fuzzy dedup: candidate
+  pairs come from per-bucket doc lists (one generator shared with the
+  cross-corpus form and sign-LSH embedding dedup), not O(n^2)
 - SimHash (64-bit fingerprint; near-dups = small Hamming distance)
 - embedding cosine near-dup (delegates to operators/similarity.py)
 
@@ -74,7 +75,6 @@ def pair_disk_guard(
     lever: str,
     budget_bytes: int | None = None,
     row_width: int = PAIR_ROW_WIDTH,
-    max_bucket: int | None = None,
 ) -> int:
     """Estimate the candidate-pair volume a bucketed self-join would emit
     and fail fast when it exceeds the scratch-disk budget.
@@ -84,40 +84,36 @@ def pair_disk_guard(
     priced BEFORE the pair explode launches, so a degenerate corpus (one
     boilerplate shingle shared by 100k docs = 5e9 pairs from a single
     bucket) dies with a clear error naming the cap ``lever`` instead of
-    filling the disk mid-job. ``max_bucket`` mirrors an active cap: only
-    buckets the operator will actually pair are counted. Returns the byte
-    estimate. Runs as its own job; call on a persisted/checkpointed frame
-    so the keyed lineage isn't recomputed for the guard.
+    filling the disk mid-job. Returns the byte estimate. Runs as its own
+    job; call on a persisted/checkpointed frame so the keyed lineage isn't
+    recomputed for the guard.
     """
-    sizes = keyed.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("d"))
-    if max_bucket is not None:
-        sizes = sizes.filter(F.col("d") <= max_bucket)
-    return pair_disk_guard_from_sizes(
-        sizes, lever, budget_bytes, row_width, size_col="d"
+    d = F.col("d")
+    return _price_pairs(
+        keyed.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("d")),
+        d * (d - 1) / 2,
+        d,
+        lever,
+        budget_bytes,
+        row_width,
     )
 
 
-def pair_disk_guard_from_sizes(
+def _price_pairs(
     sizes: DataFrame,
+    pairs,
+    biggest,
     lever: str,
     budget_bytes: int | None = None,
     row_width: int = PAIR_ROW_WIDTH,
-    size_col: str = "d",
 ) -> int:
-    """:func:`pair_disk_guard` when the caller ALREADY holds one row per
-    bucket that will pair, with the bucket's doc count in ``size_col`` —
-    the fused-aggregation path (r13): a pipeline that groups its keyed
-    rows into per-bucket doc lists anyway derives the guard from the
-    list sizes instead of paying a second full shuffle of the keyed rows
-    for a count aggregate. Same d*(d-1)/2 pricing, same error; buckets
-    the operator will not pair (dropped over-cap, singletons = 0 pairs)
-    must already be filtered out — identical arithmetic, since excluded
-    singletons price 0."""
+    """Sum the per-bucket ``pairs`` column over ``sizes`` (one row per
+    bucket that will pair) in one 1-row job and raise
+    :class:`PairExplosionError` when the pair rows would outgrow the
+    scratch-disk budget. Returns the byte estimate."""
     row = sizes.agg(
-        F.coalesce(
-            F.sum(F.col(size_col) * (F.col(size_col) - 1) / 2), F.lit(0.0)
-        ).alias("pairs"),
-        F.coalesce(F.max(size_col), F.lit(0)).alias("biggest"),
+        F.coalesce(F.sum(pairs), F.lit(0)).alias("pairs"),
+        F.coalesce(F.max(biggest), F.lit(0)).alias("biggest"),
     ).first()
     est = int(row["pairs"] * row_width)
     budget = (
@@ -131,63 +127,9 @@ def pair_disk_guard_from_sizes(
             f"(~{est / 1e9:.1f} GB at {row_width} B/row) against a "
             f"{budget / 1e9:.1f} GB scratch-disk budget; largest bucket = "
             f"{int(row['biggest']):,} docs. Cap bucket size with "
-            f"`{lever}` (a bucket of B docs is B*(B-1)/2 pairs), or raise "
+            f"`{lever}` (a bucket of B docs is B*(B-1)/2 pairs; a bucket "
+            "matched across two corpora, A*B), or raise "
             "SPARK_GRAFT_PAIR_DISK_BUDGET if the disk can take it."
-        )
-    return est
-
-
-def cross_pair_disk_guard(
-    keyed_a: DataFrame,
-    keyed_b: DataFrame,
-    key_cols: list[str],
-    lever: str,
-    budget_bytes: int | None = None,
-    row_width: int = PAIR_ROW_WIDTH,
-    max_bucket: int | None = None,
-) -> int:
-    """:func:`pair_disk_guard` for an ASYMMETRIC (two-frame) bucketed
-    join: candidate volume per matched bucket is ``d_a * d_b``, not
-    ``d*(d-1)/2``. One narrow count-per-key aggregate on each side and a
-    key-equi join of the two count frames — both sides should be
-    persisted/checkpointed so the guard job doesn't recompute their
-    lineage. ``max_bucket`` mirrors an active per-side cap (over-cap
-    buckets are dropped from BOTH sides before pairing, so they must not
-    be priced). Returns the byte estimate; raises
-    :class:`PairExplosionError` past the budget."""
-    sa = keyed_a.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("da"))
-    sb = keyed_b.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("db"))
-    if max_bucket is not None:
-        sa = sa.filter(F.col("da") <= max_bucket)
-        sb = sb.filter(F.col("db") <= max_bucket)
-    row = (
-        sa.join(sb, key_cols)
-        .agg(
-            F.coalesce(F.sum(F.col("da") * F.col("db")), F.lit(0)).alias(
-                "pairs"
-            ),
-            F.coalesce(F.max(F.greatest("da", "db")), F.lit(0)).alias(
-                "biggest"
-            ),
-        )
-        .first()
-    )
-    est = int(row["pairs"] * row_width)
-    budget = (
-        budget_bytes
-        if budget_bytes is not None
-        else _pair_disk_budget(keyed_a.sparkSession)
-    )
-    if est > budget:
-        raise PairExplosionError(
-            f"cross-corpus candidate-pair stage would emit "
-            f"~{int(row['pairs']):,} pairs (~{est / 1e9:.1f} GB at "
-            f"{row_width} B/row) against a {budget / 1e9:.1f} GB "
-            f"scratch-disk budget; largest bucket = "
-            f"{int(row['biggest']):,} docs. Cap bucket size with "
-            f"`{lever}` (a matched bucket of A x B docs is A*B pairs), "
-            "or raise SPARK_GRAFT_PAIR_DISK_BUDGET if the disk can "
-            "take it."
         )
     return est
 
@@ -504,9 +446,7 @@ def minhash_signatures(
     )
 
 
-def _band_rows(
-    sig: DataFrame, num_hashes: int, bands: int, checkpoint: bool = True
-) -> DataFrame:
+def _band_rows(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
     """(doc, band, key) LSH band rows from a (doc, sig) signature frame.
 
     Band key: the r-row signature slice's values as a STRUCT — struct
@@ -515,13 +455,10 @@ def _band_rows(
     16 bytes/key vs ~40-byte strings. The whole bands-array explode is
     ONE parsed expression (see the signature agg note in
     minhash_signatures: per-band F.struct/F.lit construction was ~200
-    py4j round-trips). ``checkpoint`` (default) lazily checkpoints the
-    frame for callers that read the banded rows more than once (the
-    self-join sides, or guard + bucket grouping) — without it the explode
-    evaluates once per read (~4s/side at sf10). Callers with exactly ONE
-    consumer (the r13 fused guarded path) pass ``checkpoint=False``: at
-    sf100 the stored banded blocks measured 21.7 GB, and storing +
-    re-reading them cost more than the single explode they saved."""
+    py4j round-trips). Not checkpointed: the rows' one consumer is the
+    bucket aggregate of :func:`_lsh_candidate_pairs` (at sf100 the stored
+    banded blocks measured 21.7 GB, and storing + re-reading them cost
+    more than the single explode they saved)."""
     r = num_hashes // bands
     band_structs = ", ".join(
         "named_struct('band', {i}, 'key', named_struct({ks}))".format(
@@ -532,12 +469,160 @@ def _band_rows(
         )
         for i in range(bands)
     )
-    out = sig.select(
+    return sig.select(
         "doc", F.expr(f"explode(array({band_structs}))").alias("bk")
     ).select(
         "doc", F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
     )
-    return out.localCheckpoint(eager=False) if checkpoint else out
+
+
+def _lsh_candidate_pairs(
+    rows: DataFrame,
+    max_bucket: int | None,
+    lever: str,
+    disk_guard: bool,
+    budget_bytes: int | None,
+    cross: bool = False,
+) -> DataFrame:
+    """(doc_a, doc_b) candidate pairs from LSH bucket rows — the one pair
+    generator behind :func:`minhash_lsh_dupes`,
+    :func:`minhash_cross_corpus_dupes` and
+    ``similarity.embedding_cosine_dupes``.
+
+    ``rows`` is (doc, band, key). ONE groupBy on (band, key) collects each
+    bucket's sorted doc list; buckets that cannot pair (fewer than two
+    docs) or exceed ``max_bucket`` (the documented recall trade, when a
+    cap is set) are dropped, and only the kept lists — collision-scaled,
+    ~MBs where the banded rows are corpus-scaled GBs — take the lazy
+    checkpoint. The ``disk_guard`` prices d*(d-1)/2 per kept list from
+    the list sizes, so the blast dies with ``lever`` named BEFORE any pair
+    row exists; its 1-row job is what materializes the checkpoint. Pairs
+    explode in place from each list: every later id of a sorted list,
+    i.e. exactly the ``doc_a < doc_b`` pairs of a bucket whose ids are
+    distinct (a caller whose ids may repeat drops the ``x, x`` pairs).
+
+    ``cross``: ``rows`` also carries ``side`` (0 = new, 1 = seen); the
+    groupBy collects one list per side, a bucket needs a doc on each side
+    (and each side within the cap, matching a per-side drop), the guard
+    prices d_new * d_seen, and pairs are (new doc, seen doc).
+
+    Why lists (stage-profiled at sf100, PLANS.md r13): a (band, key)
+    frequency-filter join has a bucket-COUNT-scaled build side (~155M
+    mostly-singleton groups) that OOMs the probe the guard exists to
+    protect; a separate count-aggregate guard is a second shuffle of the
+    banded rows (3.2 GB exchange); and checkpointing the banded rows
+    stores 21.7 GB that spilled 14 GB on re-read."""
+
+    def ids(doc):
+        return F.sort_array(F.collect_list(doc))
+
+    def pairable(col, least):
+        ok = F.size(col) >= least
+        return ok if max_bucket is None else ok & (F.size(col) <= max_bucket)
+
+    d = F.size("ds").cast("long")
+    if cross:
+        new = F.col("side") == 0
+        lists = [
+            ids(F.when(new, F.col("doc"))).alias("ds"),
+            ids(F.when(~new, F.col("doc"))).alias("ds_b"),
+        ]
+        keep = pairable("ds", 1) & pairable("ds_b", 1)
+        d_b = F.size("ds_b").cast("long")
+        pairs, biggest = d * d_b, F.greatest(d, d_b)
+        gen = (
+            "flatten(transform(ds, x -> transform(ds_b, "
+            "y -> named_struct('doc_a', x, 'doc_b', y))))"
+        )
+    else:
+        lists = [ids("doc").alias("ds")]
+        keep = pairable("ds", 2)
+        pairs, biggest = d * (d - 1) / 2, d
+        gen = (
+            "flatten(transform(ds, (x, i) -> "
+            "transform(slice(ds, i + 2, size(ds) - i - 1), "
+            "y -> named_struct('doc_a', x, 'doc_b', y))))"
+        )
+    buckets = (
+        rows.groupBy("band", "key")
+        .agg(*lists)
+        .filter(keep)
+        .drop("band", "key")
+        .localCheckpoint(eager=False)
+    )
+    if disk_guard:
+        _price_pairs(buckets, pairs, biggest, lever, budget_bytes)
+    return buckets.select(F.explode(F.expr(gen)).alias("p")).select(
+        "p.doc_a", "p.doc_b"
+    )
+
+
+def _est_jaccard_pairs(
+    cand: DataFrame,
+    sig_a: DataFrame,
+    sig_b: DataFrame,
+    num_hashes: int,
+    jaccard_threshold: float,
+) -> DataFrame:
+    """(doc_a, doc_b, est_jaccard) for the candidate pairs ``cand`` whose
+    signatures (``sig_a`` for doc_a, ``sig_b`` for doc_b — one frame for a
+    self-join) agree on at least ``jaccard_threshold`` of their
+    ``num_hashes`` components.
+
+    Candidate volume, not per-stage machinery, is the MinHash operators'
+    cost: at r=2 every pair of docs with baseline Jaccard s collides per
+    band w.p. ~s^2, and a finite-vocabulary corpus has s~0.003 between
+    GENERIC docs — sf10 measured 29.6M candidate pairs for 27k true
+    dupes. The stages are therefore shaped to touch each candidate as
+    cheaply as possible:
+      1. no eager .distinct() on candidates — band collisions are almost
+         all band-unique (29.59M distinct of 29.9M raw), so the dedup
+         shuffle runs on the tiny post-filter survivor set;
+      2. the agreement test runs first against a COMPACT low-byte
+         signature (array<tinyint>, 64B vs the 520B bigint array): byte
+         equality is implied by component equality, so byte-agreement >=
+         threshold is a lossless prefilter — every true pair survives,
+         and the ~1/256-per-component false-match tail is re-tested
+         exactly;
+      3. only survivors (~true pairs) join the full signatures for the
+         exact est_jaccard — the 520B payload never rides a
+         candidate-scaled shuffle (pre-r7 this was ~15GB at sf10).
+    Measured sf10: 34-41s -> ~22s end-to-end, identical output. (Also
+    measured and REJECTED: unrolled 64-term CASE agreement — the
+    expression blows codegen and runs 7x slower interpreted.)"""
+
+    def side(sig, tag, col, value):
+        return _sh(
+            sig.select(
+                F.col("doc").alias(f"doc_{tag}"), value.alias(f"{col}_{tag}")
+            )
+        )
+
+    def agree(col):
+        return F.size(
+            F.filter(
+                F.zip_with(f"{col}_a", f"{col}_b", lambda x, y: x == y),
+                lambda v: v,
+            )
+        )
+
+    min_agree = int(math.ceil(jaccard_threshold * num_hashes))
+    s8 = F.expr("transform(sig, x -> cast(x as tinyint))")
+    survivors = (
+        cand.join(side(sig_a, "a", "s8", s8), "doc_a")
+        .join(side(sig_b, "b", "s8", s8), "doc_b")
+        .filter(agree("s8") >= min_agree)
+        .select("doc_a", "doc_b")
+        .distinct()
+    )
+    pairs = survivors.join(side(sig_a, "a", "sig", F.col("sig")), "doc_a").join(
+        side(sig_b, "b", "sig", F.col("sig")), "doc_b"
+    )
+    return pairs.select(
+        "doc_a",
+        "doc_b",
+        (agree("sig") / F.lit(num_hashes)).alias("est_jaccard"),
+    ).filter(F.col("est_jaccard") >= jaccard_threshold)
 
 
 def minhash_lsh_dupes(
@@ -555,14 +640,16 @@ def minhash_lsh_dupes(
     pair_disk_budget: int | None = None,
 ) -> DataFrame:
     """MinHash+LSH fuzzy dedup, native DataFrame ops end to end:
-    signature -> band keys (hash of each r-row signature slice) -> candidate
-    pairs from band-bucket self-join -> signature-agreement Jaccard estimate.
+    signature -> band keys (the r-row signature slices) -> candidate
+    pairs from per-bucket doc lists (:func:`_lsh_candidate_pairs`) ->
+    signature-agreement Jaccard estimate (:func:`_est_jaccard_pairs`).
 
-    This is the 100 TB fuzzy-dedup path: candidates come from band-key
-    joins (shuffle key = (band, key)), so cost tracks true-duplicate density
-    rather than corpus size squared. With r = num_hashes/bands = 2 the
-    candidate probability at true Jaccard s is 1-(1-s^2)^bands — ~0.9999 at
-    s=0.5 — and the agreement filter removes low-similarity candidates.
+    This is the 100 TB fuzzy-dedup path: candidates come from (band, key)
+    buckets (shuffle key = (band, key)), so cost tracks true-duplicate
+    density rather than corpus size squared. With r = num_hashes/bands = 2
+    the candidate probability at true Jaccard s is 1-(1-s^2)^bands —
+    ~0.9999 at s=0.5 — and the agreement filter removes low-similarity
+    candidates.
 
     CANDIDATE-EXPLOSION HAZARD (sf100 rehearsal finding): at a fixed
     baseline inter-doc similarity s̄, band collisions between NON-dup
@@ -578,23 +665,21 @@ def minhash_lsh_dupes(
     ``max_docs_per_shingle``: a bucket of B docs is B^2/2 pairs, and a
     multi-thousand-doc bucket at threshold-worthy similarity is
     boilerplate, not duplication. Pairs whose EVERY collision band is
-    capped are lost (recall, not precision).
+    capped are lost (recall, not precision). ``disk_guard`` prices the
+    pairs of the buckets that will pair before the explode launches.
     Every stage (md5 base hash, universal-hash mins, band keys,
     agreement count) is engine-portable, so the registry entry is FULLY
     oracle-checked against a generated DuckDB twin; self-consistency
     tests additionally pin that exact dupes score 1.0.
     """
-    r = num_hashes // bands
     # materialize the per-doc signature ONCE (shingle -> md5 -> k affine
     # mins is the expensive lineage) and reuse it THREE times: band
     # generation plus both sides of the signature fetch. Pre-r5 the
     # checkpoint sat AFTER the band explode, so the stored frame carried
-    # `bands` copies of every 8*num_hashes-byte signature (32x storage)
-    # and the band self-join shuffled candidate rows with two full
-    # signature payloads each; banding narrow rows and joining the
-    # signatures back by doc id measured ~25% faster at sf0.1 and is the
-    # shape that scales (band shuffle bytes ~ docs*bands*keylen, not
-    # docs*bands*siglen).
+    # `bands` copies of every 8*num_hashes-byte signature (32x storage);
+    # banding narrow rows and joining the signatures back by doc id
+    # measured ~25% faster at sf0.1 and is the shape that scales (band
+    # shuffle bytes ~ docs*bands*keylen, not docs*bands*siglen).
     # ``signatures`` lets a session stage the signature frame as a
     # build-once artifact (the FAISS index split, same as the IVF cache):
     # the (doc, sig) frame is a pure function of (corpus, n, num_hashes,
@@ -608,137 +693,14 @@ def minhash_lsh_dupes(
             df, content_col, id_col, n, num_hashes, seed
         ).localCheckpoint(eager=False)
     )
-    banded = _band_rows(
-        sig, num_hashes, bands, checkpoint=max_docs_per_band_key is None
+    cand = _lsh_candidate_pairs(
+        _band_rows(sig, num_hashes, bands),
+        max_docs_per_band_key,
+        "max_docs_per_band_key",
+        disk_guard,
+        pair_disk_budget,
     )
-    if disk_guard and max_docs_per_band_key is None:
-        # priced on the checkpointed banded rows (the guard's aggregate
-        # doubles as the checkpoint's materializing action) — the sf100
-        # unguarded blast (6.26e9 candidates, ~300 GB shuffle) dies HERE
-        # with the cap lever named, not mid-join on ENOSPC. The capped
-        # path fuses its guard into the bucket aggregation below instead
-        # (one shuffle of the banded rows total, r13).
-        pair_disk_guard(
-            banded, ["band", "key"], "max_docs_per_band_key",
-            pair_disk_budget, max_bucket=max_docs_per_band_key,
-        )
-    a, b = _sh(banded.alias("a")), _sh(banded.alias("b"))
-    # Candidate volume, not per-stage machinery, is this operator's cost:
-    # at r=2 every pair of docs with baseline Jaccard s collides per band
-    # w.p. ~s^2, and a finite-vocabulary corpus has s~0.003 between
-    # GENERIC docs — sf10 measured 29.6M candidate pairs for 27k true
-    # dupes. The post-band stages are therefore shaped to touch each
-    # candidate as cheaply as possible:
-    #   1. no eager .distinct() on candidates — band collisions are
-    #      almost all band-unique (29.59M distinct of 29.9M raw), so the
-    #      dedup shuffle moved to the tiny post-filter survivor set;
-    #   2. the signature-agreement test runs first against a COMPACT
-    #      low-byte signature (array<tinyint>, 64B vs the 520B bigint
-    #      array): byte equality is implied by component equality, so
-    #      byte-agreement >= threshold is a lossless prefilter — every
-    #      true pair survives, and the ~1/256-per-component false-match
-    #      tail is re-tested exactly;
-    #   3. only survivors (~true pairs) join the full signatures for the
-    #      exact est_jaccard — the 520B payload never rides a
-    #      candidate-scaled shuffle (pre-r7 this was ~15GB at sf10).
-    # Measured sf10: 34-41s -> ~22s end-to-end, identical output.
-    # (Also measured and REJECTED: unrolled 64-term CASE agreement —
-    # the expression blows codegen and runs 7x slower interpreted;
-    # pre-partitioned checkpoint self-join — AQE picks a sort-merge
-    # join and the sorts cost more than the saved exchange.)
-    if max_docs_per_band_key is not None:
-        # Guarded path: bucket-grouping pair generation, NOT a df-filter
-        # join — the frequency join's build side is bucket-COUNT-scaled
-        # (~155M mostly-singleton (band,key) groups at sf100), and a
-        # shuffled-hash build side that big OOMs the very probe the guard
-        # exists to protect. One groupBy collects each bucket's doc list;
-        # over-cap buckets are DROPPED (the documented recall trade),
-        # survivors pair-explode in place. Pairs within kept buckets are
-        # identical to drop-then-self-join semantics.
-        #
-        # r13 FUSION (stage-profiled at sf100, PLANS.md r13): the banded
-        # rows are consumed exactly ONCE. The previous shape paid the
-        # band explode three extra ways before any pairing — a lazy-
-        # checkpoint block store of the full banded frame (21.7 GB at
-        # sf100), a separate guard shuffle (count aggregate over 155M
-        # mostly-singleton buckets, 3.2 GB exchange + its own partial-agg
-        # hash pass), and a re-read of the stored 21.7 GB into the
-        # collect_list aggregate (14 GB of spill). Now the ONE bucket
-        # aggregate feeds everything: the kept (2 <= d <= cap) doc lists
-        # are collision-scaled (~MBs, not corpus-banded GBs), THEY take
-        # the lazy checkpoint, and the guard prices d*(d-1)/2 from the
-        # kept lists' sizes — identical arithmetic (dropped over-cap
-        # buckets were excluded before; singletons price 0) — still
-        # BEFORE the pair explode launches.
-        buckets = (
-            banded.groupBy("band", "key")
-            .agg(F.sort_array(F.collect_list("doc")).alias("ds"))
-            .filter(
-                (F.size("ds") > 1) & (F.size("ds") <= max_docs_per_band_key)
-            )
-            .select("ds")
-            .localCheckpoint(eager=False)
-        )
-        if disk_guard:
-            pair_disk_guard_from_sizes(
-                buckets.select(F.size("ds").alias("d")),
-                "max_docs_per_band_key",
-                pair_disk_budget,
-            )
-        cand = buckets.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ds, (x, i) -> "
-                    "transform(slice(ds, i + 2, size(ds) - i - 1), "
-                    "y -> named_struct('doc_a', x, 'doc_b', y))))"
-                )
-            ).alias("p")
-        ).select("p.doc_a", "p.doc_b")
-    else:
-        cand = a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        ).select(
-            F.col("a.doc").alias("doc_a"),
-            F.col("b.doc").alias("doc_b"),
-        )
-    min_agree = int(math.ceil(jaccard_threshold * num_hashes))
-    sig8 = sig.select(
-        "doc", F.expr("transform(sig, x -> cast(x as tinyint))").alias("s8")
-    )
-    agree8 = F.size(
-        F.filter(F.zip_with("s8_a", "s8_b", lambda x, y: x == y), lambda v: v)
-    )
-    survivors = (
-        cand.join(
-            _sh(sig8.select(F.col("doc").alias("doc_a"), F.col("s8").alias("s8_a"))),
-            "doc_a",
-        )
-        .join(
-            _sh(sig8.select(F.col("doc").alias("doc_b"), F.col("s8").alias("s8_b"))),
-            "doc_b",
-        )
-        .filter(agree8 >= min_agree)
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    pairs = survivors.join(
-        _sh(sig.select(F.col("doc").alias("doc_a"), F.col("sig").alias("sig_a"))),
-        "doc_a",
-    ).join(
-        _sh(sig.select(F.col("doc").alias("doc_b"), F.col("sig").alias("sig_b"))),
-        "doc_b",
-    )
-    agree = F.size(
-        F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda v: v)
-    )
-    return pairs.select(
-        "doc_a",
-        "doc_b",
-        (agree / F.lit(num_hashes)).alias("est_jaccard"),
-    ).filter(F.col("est_jaccard") >= jaccard_threshold)
+    return _est_jaccard_pairs(cand, sig, sig, num_hashes, jaccard_threshold)
 
 
 def minhash_cross_corpus_dupes(
@@ -765,161 +727,45 @@ def minhash_cross_corpus_dupes(
     Same machinery as the self-join path — per-doc signatures
     (:func:`minhash_signatures`, identical coefficients on both sides, so
     a doc's signature is independent of which corpus it sits in), band
-    rows (:func:`_band_rows`), bucket-grouped pair generation — but the
-    join is new-buckets x seen-buckets on (band, key): one row per
-    matched bucket pair, exploded in place, so the shuffle carries bucket
-    lists once rather than a candidate-scaled row stream, and the seen
-    side's self-pairs never materialize. At 100 TB the seen side's
-    (doc, sig) frame is the artifact you keep materialized between crawl
-    batches (pass nothing here — signatures are a pure function of the
-    text, so recompute-vs-reuse never changes results).
+    rows (:func:`_band_rows`), the shared bucket-list generator
+    (:func:`_lsh_candidate_pairs`) in its cross form: the two sides' band
+    rows are tagged and grouped together, once, into a new list and a
+    seen list per (band, key), so the seen side's self-pairs never
+    materialize. At 100 TB the seen side's (doc, sig) frame is the
+    artifact you keep materialized between crawl batches (pass nothing
+    here — signatures are a pure function of the text, so
+    recompute-vs-reuse never changes results).
 
     ``max_docs_per_band_key`` drops over-cap (band, key) buckets on EACH
     side before pairing — the same recall-for-survival trade as the
     guarded self-join path, mirrored in the DuckDB twin with per-side
     QUALIFY cuts. ``disk_guard`` prices sum(d_new * d_seen) over matched
-    buckets before the pair stage launches
-    (:func:`cross_pair_disk_guard`)."""
+    buckets before the pair stage launches."""
     sig_new = minhash_signatures(
         new_docs, content_col, id_col, n, num_hashes, seed
     ).localCheckpoint(eager=False)
     sig_seen = minhash_signatures(
         seen_docs, content_col, id_col, n, num_hashes, seed
     ).localCheckpoint(eager=False)
-    banded_new = _band_rows(sig_new, num_hashes, bands)
-    banded_seen = _band_rows(sig_seen, num_hashes, bands)
-    if disk_guard:
-        cross_pair_disk_guard(
-            banded_new,
-            banded_seen,
-            ["band", "key"],
-            "max_docs_per_band_key",
-            pair_disk_budget,
-            max_bucket=max_docs_per_band_key,
-        )
-
-    def _buckets(banded: DataFrame, list_col: str) -> DataFrame:
-        g = banded.groupBy("band", "key").agg(
-            F.sort_array(F.collect_list("doc")).alias(list_col)
-        )
-        if max_docs_per_band_key is not None:
-            g = g.filter(F.size(list_col) <= max_docs_per_band_key)
-        return g
-
-    # bucket-to-bucket join (one row per (band, key) per side; build side
-    # = the new batch's bucket count), then the cross product explodes in
-    # place — the same shuffled-hash-build-side discipline the guarded
-    # self-join path adopted after the sf100 155M-singleton-group OOM.
-    cand = (
-        _sh(_buckets(banded_new, "na"))
-        .join(_sh(_buckets(banded_seen, "sa")), ["band", "key"])
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(na, x -> transform(sa, y -> "
-                    "named_struct('new_doc', x, 'seen_doc', y))))"
-                )
-            ).alias("p")
-        )
-        .select("p.new_doc", "p.seen_doc")
+    rows = _band_rows(sig_new, num_hashes, bands).withColumn(
+        "side", F.lit(0)
+    ).unionByName(
+        _band_rows(sig_seen, num_hashes, bands).withColumn("side", F.lit(1))
     )
-    # agreement stages mirror minhash_lsh_dupes: compact tinyint
-    # prefilter over every (band-duplicated) candidate, distinct only the
-    # survivor set, exact bigint agreement on the survivors.
-    min_agree = int(math.ceil(jaccard_threshold * num_hashes))
-    s8 = "transform(sig, x -> cast(x as tinyint))"
-    agree8 = F.size(
-        F.filter(F.zip_with("s8_a", "s8_b", lambda x, y: x == y), lambda v: v)
+    cand = _lsh_candidate_pairs(
+        rows,
+        max_docs_per_band_key,
+        "max_docs_per_band_key",
+        disk_guard,
+        pair_disk_budget,
+        cross=True,
     )
-    survivors = (
-        cand.join(
-            _sh(
-                sig_new.select(
-                    F.col("doc").alias("new_doc"), F.expr(s8).alias("s8_a")
-                )
-            ),
-            "new_doc",
-        )
-        .join(
-            _sh(
-                sig_seen.select(
-                    F.col("doc").alias("seen_doc"), F.expr(s8).alias("s8_b")
-                )
-            ),
-            "seen_doc",
-        )
-        .filter(agree8 >= min_agree)
-        .select("new_doc", "seen_doc")
-        .distinct()
-    )
-    pairs = survivors.join(
-        _sh(
-            sig_new.select(
-                F.col("doc").alias("new_doc"), F.col("sig").alias("sig_a")
-            )
-        ),
-        "new_doc",
-    ).join(
-        _sh(
-            sig_seen.select(
-                F.col("doc").alias("seen_doc"), F.col("sig").alias("sig_b")
-            )
-        ),
-        "seen_doc",
-    )
-    agree = F.size(
-        F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda v: v)
-    )
-    return pairs.select(
-        "new_doc",
-        "seen_doc",
-        (agree / F.lit(num_hashes)).alias("est_jaccard"),
-    ).filter(F.col("est_jaccard") >= jaccard_threshold)
-
-
-def minhash_lsh_dupes_ml(
-    df: DataFrame,
-    content_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    num_hash_tables: int = 8,
-    jaccard_threshold: float = 0.5,
-    seed: int = 42,
-) -> DataFrame:
-    """spark.ml MinHashLSH variant of :func:`minhash_lsh_dupes` (HashingTF
-    sparse vectors + ``approxSimilarityJoin``). Kept as the API-parity path
-    for pipelines already standardized on ``pyspark.ml``; the native variant
-    benches faster (no fit pass, no vector conversion)."""
-    from pyspark.ml.feature import HashingTF, MinHashLSH
-
-    toks = (
-        df.select(
-            F.col(id_col).alias("doc"),
-            T.tokens(F.col(content_col)).alias("__toks"),
-        )
-        .select(
-            "doc", T.word_shingles(F.col("__toks"), n).alias("shingles")
-        )
-        .filter(F.size("shingles") > 0)
-    )
-    tf = HashingTF(
-        inputCol="shingles", outputCol="features", numFeatures=1 << 18, binary=True
-    )
-    feats = tf.transform(toks)
-    mh = MinHashLSH(
-        inputCol="features", outputCol="hashes", numHashTables=num_hash_tables, seed=seed
-    )
-    model = mh.fit(feats)
-    pairs = model.approxSimilarityJoin(
-        feats, feats, 1.0 - jaccard_threshold, distCol="jaccard_dist"
-    )
-    return (
-        pairs.select(
-            F.col("datasetA.doc").alias("doc_a"),
-            F.col("datasetB.doc").alias("doc_b"),
-            (1 - F.col("jaccard_dist")).alias("est_jaccard"),
-        )
-        .filter(F.col("doc_a") < F.col("doc_b"))
+    return _est_jaccard_pairs(
+        cand, sig_new, sig_seen, num_hashes, jaccard_threshold
+    ).select(
+        F.col("doc_a").alias("new_doc"),
+        F.col("doc_b").alias("seen_doc"),
+        "est_jaccard",
     )
 
 

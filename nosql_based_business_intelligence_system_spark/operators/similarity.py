@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import vectors as V
+from .dedup import _lsh_candidate_pairs, _sh
 
 
 def brute_force_topk(
@@ -701,11 +702,14 @@ def embedding_cosine_dupes(
 
     ``max_ids_per_band_key`` mirrors minhash_lsh_dupes'
     ``max_docs_per_band_key``: drop (band, key) buckets larger than the
-    cap before the self-join — a bucket of B vectors is B*(B-1)/2
+    cap before pairing — a bucket of B vectors is B*(B-1)/2
     candidate pairs, and at sign-LSH an over-full bucket means a dense
     direction cluster, not duplication. Pairs whose EVERY collision band
     is capped are lost (recall, not precision); OFF by default so the
     frozen registry entry keeps its verified recall contract.
+    ``disk_guard`` prices the kept buckets' pairs before any pair row
+    exists — candidates come from the bucket-list generator shared with
+    the MinHash operators (``dedup._lsh_candidate_pairs``).
 
     Signature = sign bits of ``n_planes`` Rademacher (+-1) projections —
     Achlioptas-style random projections give the same sign-LSH guarantee
@@ -749,61 +753,47 @@ def embedding_cosine_dupes(
 
     band_keys = F.pandas_udf(_band_keys, ArrayType(LongType()))
 
-    sig = df.select(
-        F.col(id_col).alias("id"),
-        V.as_double(F.col(vec_col)).alias("v"),
+    # candidates from the shared bucket-list generator (the guard prices
+    # the kept lists, so the projection UDF runs once, when their
+    # checkpoint materializes); vectors join back by id after the
+    # candidate distinct instead of riding every banded row
+    rows = df.select(
+        F.col(id_col).alias("doc"),
         F.posexplode(band_keys(F.col(vec_col))).alias("band", "key"),
     )
-    if disk_guard:
-        # the last unguarded pair generator of the r8 ENOSPC blast class
-        # (r10 verdict item 5): with r = n_planes/bands sign bits per key,
-        # 2^r buckets per band saturate like SimHash's 15-bit space —
-        # price sum(d*(d-1)/2) over (band, key) BEFORE the self-join and
-        # fail fast naming the lever. Priced on a narrow (band, key)
-        # re-projection (id/vector pruned), so the guard job re-runs only
-        # the projection UDF — a deliberate trade against checkpointing
-        # `sig`, which would both pin the full per-band vector payload in
-        # storage and invalidate the self-join's size statistics (the
-        # estimate-broadcast hazard dedup._sh exists for). max_bucket
-        # mirrors the active cap so capped-away buckets aren't priced.
-        from .dedup import pair_disk_guard
-
-        pair_disk_guard(
-            sig.select("band", "key"),
-            ["band", "key"],
-            lever="max_ids_per_band_key",
-            budget_bytes=pair_disk_budget,
-            max_bucket=max_ids_per_band_key,
-        )
-    if max_ids_per_band_key is not None:
-        # (band, key) space is bounded by bands * 2^r, so the allowed-
-        # bucket frame stays small; left-semi keeps sig narrow.
-        ok = (
-            sig.groupBy("band", "key")
-            .agg(F.count(F.lit(1)).alias("__d"))
-            .filter(F.col("__d") <= max_ids_per_band_key)
-            .drop("__d")
-        )
-        sig = sig.join(ok, ["band", "key"], "left_semi")
-    a, b = sig.alias("a"), sig.alias("b")
     cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.id") < F.col("b.id")),
+        _lsh_candidate_pairs(
+            rows,
+            max_ids_per_band_key,
+            "max_ids_per_band_key",
+            disk_guard,
+            pair_disk_budget,
         )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.v").alias("va"),
-            F.col("b.v").alias("vb"),
-        )
+        # a vec_id on several rows is listed once per row: drop its
+        # pairs with itself
+        .filter(F.col("doc_a") < F.col("doc_b"))
         .distinct()
     )
-    return cand.select(
-        "id_a", "id_b", V.cosine(F.col("va"), F.col("vb")).alias("score")
-    ).filter(F.col("score") >= threshold)
+
+    def vecs(tag):
+        return _sh(
+            df.select(
+                F.col(id_col).alias(f"doc_{tag}"),
+                V.as_double(F.col(vec_col)).alias(f"v{tag}"),
+            )
+        )
+
+    pairs = cand.join(vecs("a"), "doc_a").join(vecs("b"), "doc_b")
+    return (
+        pairs.select(
+            F.col("doc_a").alias("id_a"),
+            F.col("doc_b").alias("id_b"),
+            V.cosine(F.col("va"), F.col("vb")).alias("score"),
+        )
+        .filter(F.col("score") >= threshold)
+        # a repeated (vec_id, vector) row joins back once per copy
+        .distinct()
+    )
 
 
 def _nearest_cell(

@@ -56,6 +56,23 @@ SCALE_CONF: dict[str, str] = {
 }
 
 
+def physical_ram_bytes() -> int:
+    """This host's physical RAM (``os.sysconf``); 0 where the platform
+    does not report it."""
+    try:
+        return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):
+        return 0
+
+
+def ram_share_gib(ram_bytes: int, share: float, cap_gib: int | None = None) -> int:
+    """``share`` of ``ram_bytes`` in whole GiB (rounded down), at least 1
+    and at most ``cap_gib`` — so a default sized from the box never
+    exceeds the box."""
+    gib = max(1, int(ram_bytes * share) >> 30)
+    return gib if cap_gib is None else min(gib, cap_gib)
+
+
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8)))
 
@@ -145,9 +162,16 @@ def get_spark(
     # data passes ~sf1 (observed: broadcast OOM at 6M-row lineitem). On a
     # real cluster this is executor/driver sizing; locally it's one knob.
     # Static conf: only effective for the process's FIRST JVM launch —
-    # harness-owned sessions keep their own sizing.
+    # harness-owned sessions keep their own sizing. Default: half the
+    # physical RAM, at most the 16g the sf1-sf10 ladder ran on (bigger
+    # decades set SPARK_GRAFT_DRIVER_MEM); the other half is left to the
+    # Python workers, off-heap buffers and a DuckDB oracle on the box.
     conf.setdefault(
-        "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+        "spark.driver.memory",
+        os.environ.get(
+            "SPARK_GRAFT_DRIVER_MEM",
+            f"{ram_share_gib(physical_ram_bytes(), 0.5, 16)}g",
+        ),
     )
     # Initial shuffle partitions: local-core count. Measured across the
     # sf ladder (PLANS.md round-7 notes): at sf100 a 600M-row fact-fact

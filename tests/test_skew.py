@@ -296,8 +296,11 @@ def test_pair_disk_guard_noop_on_fixture(spark, sf_correctness):
     assert guarded == plain and plain
     sh = dedup.shingle_rows(docs, "text", "doc_id", 3)
     est_all = dedup.pair_disk_guard(sh, ["shingle"], "max_docs_per_shingle")
+    small = sh.join(
+        sh.groupBy("shingle").count().filter("count <= 2"), "shingle"
+    )
     est_capped = dedup.pair_disk_guard(
-        sh, ["shingle"], "max_docs_per_shingle", max_bucket=2
+        small, ["shingle"], "max_docs_per_shingle"
     )
     assert 0 < est_capped < est_all
 

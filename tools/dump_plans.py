@@ -183,7 +183,8 @@ doc_text_stats, dedup_minhash — scales with the 10x documents table and
 stays sub-linear). One config finding fixed along the way: local mode's
 default 1g driver heap OOM'd building a 64 MB broadcast at sf1 —
 `session.get_spark` now sizes the local JVM (`SPARK_GRAFT_DRIVER_MEM`,
-default 16g); on a cluster this is ordinary executor/driver sizing.
+default half the physical RAM, at most 16g); on a cluster this is
+ordinary executor/driver sizing.
 
 **IVF/PQ registry policy change (round 4).** The r3 pinned policy
 (Lloyd=1 over a 4096-row md5 sample) is superseded ON THE REGISTRY

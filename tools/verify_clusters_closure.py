@@ -43,6 +43,10 @@ def main() -> int:
     from nosql_based_business_intelligence_system_spark.queries.text_suite import (
         DEDUP_CLUSTER_PAIR_CTES,
     )
+    from nosql_based_business_intelligence_system_spark.session import (
+        physical_ram_bytes,
+        ram_share_gib,
+    )
 
     # Compose from the SAME named CTE-prefix constant the registry oracle
     # uses (text_suite.DEDUP_CLUSTER_PAIR_CTES), so candidate semantics
@@ -51,10 +55,15 @@ def main() -> int:
     edge_sql = f"WITH {DEDUP_CLUSTER_PAIR_CTES} SELECT doc_a, doc_b FROM dupes"
 
     con = duckdb.connect()
+    # JVM-free (the Spark side is a recording): DuckDB may take half the
+    # box's physical RAM before it spills
     try:
         con.execute(
             "SET memory_limit='"
-            + os.environ.get("SPARK_GRAFT_DUCKDB_MEM", "100GB")
+            + os.environ.get(
+                "SPARK_GRAFT_DUCKDB_MEM",
+                f"{ram_share_gib(physical_ram_bytes(), 0.5)}GB",
+            )
             + "'"
         )
         con.execute("SET temp_directory='/tmp/duckdb_spill'")

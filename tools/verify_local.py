@@ -179,14 +179,23 @@ def main() -> int:
     con = duckdb.connect()
     # DuckDB's default memory ceiling (80% of RAM) ignores the Spark JVM
     # sharing the box; a heavy twin then OOM-kills the whole process
-    # (observed at sf10: 99.9 GB RSS). Cap it and let it SPILL instead.
-    # The quadratic-twin queries (sf10 shingle self-join: ~2.7e9
-    # candidate pairs) need the opposite trade when run SOLO — more RAM,
-    # no spill — so the cap is an env knob.
+    # (observed at sf10: 99.9 GB RSS). Cap it at a quarter of physical RAM
+    # (the JVM heap defaults to half) and let it SPILL instead. The
+    # quadratic-twin queries (sf10 shingle self-join: ~2.7e9 candidate
+    # pairs) need the opposite trade when run SOLO — more RAM, no spill —
+    # so the cap is an env knob.
+    from nosql_based_business_intelligence_system_spark.session import (
+        physical_ram_bytes,
+        ram_share_gib,
+    )
+
     try:
         con.execute(
             "SET memory_limit='"
-            + os.environ.get("SPARK_GRAFT_DUCKDB_MEM", "40GB")
+            + os.environ.get(
+                "SPARK_GRAFT_DUCKDB_MEM",
+                f"{ram_share_gib(physical_ram_bytes(), 0.25)}GB",
+            )
             + "'"
         )
         con.execute(
