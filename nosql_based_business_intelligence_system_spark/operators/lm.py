@@ -58,18 +58,31 @@ def ckpt_actual_bytes(df: DataFrame) -> int | None:
     threshold at some sf even when the real table is a few MB (measured:
     the dsir sf100 scoring join silently degraded to sort-merge, 2GB of
     exploded-gram shuffle, while the model's real blocks were 7.2MB).
-    Returns None when the frame is not a materialized checkpoint root."""
+    Returns None when the frame is not a materialized checkpoint root.
+
+    Reads only this RDD's blocks: per block manager, its disk bytes and
+    the memory bytes of each of its partitions, so the number of JVM
+    calls depends on this frame alone, not on how many other RDDs are
+    persisted (walking ``getRDDStorageInfo`` did)."""
     try:
         node = df._jdf.queryExecution().analyzed()
         if node.getClass().getSimpleName() != "LogicalRDD":
             return None
-        rid = node.rdd().id()
-        for info in df.sparkSession.sparkContext._jsc.sc().getRDDStorageInfo():
-            if info.id() == rid:
-                return int(info.memSize()) + int(info.diskSize())
+        rdd = node.rdd()
+        rid, n = rdd.id(), rdd.getNumPartitions()
+        sc = df.sparkSession.sparkContext
+        block_id = sc._jvm.org.apache.spark.storage.RDDBlockId
+        total, cached = 0, False
+        for st in sc._jsc.sc().env().blockManager().master().getStorageStatus():
+            total += int(st.diskUsedByRdd(rid))
+            for i in range(n):
+                blk = st.getBlock(block_id(rid, i))
+                if blk.isDefined():
+                    cached = True
+                    total += int(blk.get().memSize())
     except Exception:
         return None
-    return None
+    return total if cached else None
 
 
 def token_bigrams(toks: Column) -> Column:

@@ -1,16 +1,31 @@
 """Similarity search over embedding columns (north-star scope).
 
-- brute-force cosine top-k: broadcast the (small) query set against the
-  corpus; per-query rank via window. Exact; the baseline.
-- LSH-bucketed top-k (BucketedRandomProjectionLSH): the scale path —
-  candidates from hash buckets instead of the full cross product.
-- IVF-style coarse quantization: assign corpus vectors to the nearest of K
-  deterministic centroids, probe only matching cells — a pure-DataFrame
-  approximation of IVF-Flat.
+- brute_force_topk: exact top-k neighbours of a small query set. The
+  query side broadcasts and the corpus never shuffles; O(|Q| x |C|).
+- rp_bucket_topk: approximate top-k from bucketed random projections
+  (E2LSH on md5-derived +-1 planes): candidates share a (table, key)
+  bucket with the query.
+- ivf_assign / ivf_topk: IVF-Flat. Each vector is assigned to the
+  nearest of K deterministic centroids; a query probes only its nearest
+  cells.
+- pq_train_encode / pq_topk: product quantization with asymmetric
+  (ADC) scoring over m-byte codes, optionally reranked exactly.
+- semantic_dedup_pairs / semantic_dedup_keep: SemDeDup near-duplicates
+  within IVF cells.
+- cosine_pairs / embedding_cosine_dupes: exact (bounded) and sign-LSH
+  near-duplicate pairs.
 
-Scale stance: brute force is O(|Q| x |C|) — fine for |Q| small because the
-query side broadcasts and the corpus never shuffles; for corpus-vs-corpus
-similarity use the LSH/IVF paths.
+Select, then rescore: wherever numpy scores vectors it only SELECTS
+candidates, a superset of the answer kept within ``_CAND_EPS`` of a cut.
+The emitted scores (and the final cut or rank) are always the same
+Spark fold expressions the pure-expression plan uses, so both plans emit
+identical values. Two kernels hold that numpy side: ``_select_topk``, the
+per-batch top-k of brute force, RP-LSH and PQ-ADC, and ``_propose_cells``,
+the nearest-centroid proposal of IVF assignment and PQ encoding. Each
+operator picks its tier itself: RP-LSH takes the Arrow tier whenever the
+selector accepts; brute force and PQ take it once the corpus plan's size
+estimate reaches ``_ARROW_MIN_BYTES``; nearest-cell assignment past
+``_NEAREST_CELL_ARROW_K`` centroids.
 """
 
 from __future__ import annotations
@@ -21,6 +36,133 @@ from pyspark.sql import functions as F
 from ..functions import vectors as V
 from .dedup import _lsh_candidate_pairs, _sh
 
+#: The Arrow top-k selector collects and broadcasts the query side; past
+#: this many query rows it declines and the operator keeps its expression
+#: plan, which never materializes the query side on the driver.
+BF_TOPK_MAX_QUERIES = 10_000
+
+#: Candidate slack: numpy's SIMD-pairwise dot accumulates in a different
+#: order than the emitted fold-expression score, so candidates are found at
+#: ``threshold - EPS`` and the exact filter happens on the fold score.
+_CAND_EPS = 1e-9
+
+#: Corpus plan size estimate from which brute force and PQ take the Arrow
+#: tier: about 1M 64-dim embedding rows. The estimate reads 387-399 B per
+#: row on the sf0.01/sf0.1 fixtures (500 and 2k vectors) and 262 B on a
+#: tools/make_sf.py sf1 (20k), so sf10 (200k vectors, 52-80 MB) stays on
+#: expressions and sf100 (2M, 0.52-0.8 GB) crosses. Below it the Arrow
+#: pass's fixed cost (query collect, broadcast, Python workers, a rescore
+#: stage) loses to the expression plan; at sf100 the expression pair stage
+#: runs in the bytecode interpreter and the Arrow tier wins (brute force
+#: 53.2s -> 2.0s, PQ 93.6s -> 11.4s; PLANS.md).
+_ARROW_MIN_BYTES = 384 << 20
+
+_INTEGRAL = ("tinyint", "smallint", "int", "bigint")
+
+
+def _plan_bytes(df: DataFrame) -> int:
+    """Catalyst's size estimate of ``df``'s optimized plan; starts no job."""
+    return int(
+        str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    )
+
+
+def _topk(scored: DataFrame, k: int) -> DataFrame:
+    """Ranks 1..k of ``scored`` (query_id, neighbor_id, score) per query:
+    score descending (NULL last, NaN first, as Spark orders doubles),
+    ties to the lower neighbor_id."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("score"), F.asc("neighbor_id")
+    )
+    return scored.withColumn(
+        "rank", F.row_number().over(w).cast("bigint")
+    ).filter(F.col("rank") <= k)
+
+
+def _cosines(a, qmat, qn):
+    """(rows x queries) numpy cosine matrix; 0/0 and x/0 give NaN/inf."""
+    import numpy as np
+
+    an = np.sqrt(np.einsum("ij,ij->i", a, a))
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return (a @ qmat.T) / np.outer(an, qn)
+
+
+def _select_topk(stream, queries, k, prep, score, payload, rescore):
+    """Arrow tier of the top-k operators: per-batch candidate selection
+    in numpy, then the operator's exact expression re-scores survivors.
+
+    ``stream`` is the corpus side (``id`` plus what ``score`` reads);
+    ``queries`` is the query side (``query_id`` plus what ``prep`` and
+    ``rescore`` read). Returns None, declining, when either id is not
+    integral (ids ride Arrow as int64) or the query side has more than
+    ``BF_TOPK_MAX_QUERIES`` rows; the caller then keeps its expression
+    plan. Otherwise the query rows are collected, ``prep(rows)`` packs
+    them for one broadcast, and each Arrow batch calls
+    ``score(pdf, ids, qids, packed)`` for the (rows x queries) score
+    matrix, the eligible mask, a force-keep mask (or None) and the
+    ``payload`` columns as a pandas frame, one row per batch row.
+
+    Per query, a batch keeps every eligible row within ``_CAND_EPS`` of
+    its k-th best finite score plus the force-kept rows, or every
+    eligible row when fewer than k scores are finite (NaN and ineligible
+    scores count as -inf). The union over batches is a superset of each
+    query's top k, so ``rescore`` (a Column over the payload joined to
+    the broadcast query side) and the top-k window emit exactly what the
+    expression plan emits.
+    """
+    import numpy as np
+
+    if dict(stream.dtypes).get("id") not in _INTEGRAL or (
+        dict(queries.dtypes).get("query_id") not in _INTEGRAL
+    ):
+        return None
+    rows = queries.limit(BF_TOPK_MAX_QUERIES + 1).collect()
+    if len(rows) > BF_TOPK_MAX_QUERIES:
+        return None
+    spark = stream.sparkSession
+    if not rows:
+        return spark.createDataFrame(
+            [], "query_id bigint, neighbor_id bigint, score double, rank bigint"
+        )
+    qids = np.array([r["query_id"] for r in rows], dtype="int64")
+    b = spark.sparkContext.broadcast((qids, prep(rows)))
+
+    def gen(batches):
+        bqids, packed = b.value
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            aid = pdf["id"].to_numpy()
+            s, eligible, force, pay = score(pdf, aid, bqids, packed)
+            s = np.where(np.isnan(s) | ~eligible, -np.inf, s)
+            keep = []
+            for j in range(len(bqids)):
+                col = s[:, j]
+                if int(np.isfinite(col).sum()) >= k:
+                    kth = np.partition(col, len(col) - k)[len(col) - k]
+                    hit = col >= kth - _CAND_EPS
+                    if force is not None:
+                        hit |= force[:, j]
+                    keep.append(np.flatnonzero(hit))
+                else:
+                    keep.append(np.flatnonzero(eligible[:, j]))
+            idx = np.concatenate(keep)
+            out = pay.iloc[idx].reset_index(drop=True)
+            out.insert(0, "neighbor_id", aid[idx])
+            out.insert(0, "query_id", np.repeat(bqids, [len(x) for x in keep]))
+            yield out
+
+    cands = stream.mapInPandas(
+        gen, f"query_id long, neighbor_id long, {payload}"
+    )
+    return _topk(
+        cands.join(F.broadcast(queries), "query_id").select(
+            "query_id", "neighbor_id", rescore.alias("score")
+        ),
+        k,
+    )
+
 
 def brute_force_topk(
     corpus: DataFrame,
@@ -30,18 +172,8 @@ def brute_force_topk(
     vec_col: str = "embedding",
     metric: str = "cosine",
     dim: int | None = None,
-    arrow: bool | None = None,
 ) -> DataFrame:
     """Exact top-k neighbors per query vector (excluding self-matches).
-
-    ``arrow`` selects the cosine candidate path: True/None (default) uses
-    the Arrow-batched selection when metric='cosine' and ``dim`` is known
-    — the third-decade shape (sf100: 53.2s -> 2.0s) — while False keeps
-    the pure expression plan, which wins at bench scale where the Arrow
-    pass's fixed cost (query collect + broadcast + one extra rescore
-    stage) exceeds its savings (measured sf0.1: 0.63s expression vs 0.68s
-    Arrow). Both paths emit identical values (the r7 selection-vs-scoring
-    split); the suite gates on corpus row count.
 
     Output: query_id, neighbor_id, score, rank (1..k). The query side is
     broadcast; ranking shuffles only (n_queries x corpus) scored rows
@@ -51,6 +183,22 @@ def brute_force_topk(
     same doubles as the fold; pass it when known (a probe job costs more
     than it saves on small corpora), else it's probed from one corpus row.
 
+    Cosine with a known ``dim`` over a corpus whose plan estimate reaches
+    ``_ARROW_MIN_BYTES`` takes the Arrow tier (:func:`_select_topk`). At
+    that scale the 64-term unrolled dot generates a codegen method past
+    HotSpot's huge-method limit, so the expression pair stage runs in the
+    bytecode interpreter (~5.7us/pair; sf100, 2M corpus x 5 queries: 57s
+    against ~2s). Each batch scores against the broadcast query matrix
+    with one matmul; the survivors are re-scored with the expression
+    tier's own fold, so values and ranks are identical. Both tiers rank
+    like Spark: a NULL vector's NULL score ranks LAST, while a non-NULL
+    vector with a NaN COMPONENT scores NaN, which Spark orders above any
+    value, so it ranks FIRST. The selector keeps NULL-vector rows only
+    when a batch has fewer than k finite candidates and always keeps
+    NaN-component rows; those carry a flag alongside the vector because
+    the pandas->Arrow boundary masks a NaN element inside an emitted list
+    to null, and the rescore re-creates their NaN score as a literal.
+
     UNIFORM-DIM CONTRACT (applies to every unrolled ANN path: this,
     ivf_topk, semantic_dedup_*): every vector must have exactly the
     probed/passed length. A shorter vector yields NULL getItem terms, so
@@ -59,6 +207,8 @@ def brute_force_topk(
     are unsupported here by contract — validate or pad upstream, or call
     with an explicit ``dim=None`` to get fold semantics.
     """
+    import numpy as np
+
     if dim is None:
         probe = corpus.select(vec_col).first()
         dim = len(probe[0]) if probe and probe[0] is not None else None
@@ -69,12 +219,51 @@ def brute_force_topk(
     q = queries.select(
         F.col(id_col).alias("query_id"), V.as_double(F.col(vec_col)).alias("qv")
     ).withColumn("qn", V.norm("qv"))
-    if metric == "cosine" and dim is not None and arrow is not False:
-        res = _bf_topk_cosine_arrow(corpus, q, k, id_col, vec_col, dim)
+    if (
+        metric == "cosine"
+        and dim is not None
+        and _plan_bytes(corpus) >= _ARROW_MIN_BYTES
+    ):
+
+        def prep(rows):
+            # a NULL query vector becomes a NaN row: its scores are all
+            # NaN, so every non-self row is kept and the rescore gives
+            # NULL scores, as the expression tier does
+            qmat = np.array(
+                [r["qv"] if r["qv"] is not None else [np.nan] * dim
+                 for r in rows],
+                dtype="float64",
+            )
+            return qmat, np.sqrt(np.einsum("ij,ij->i", qmat, qmat))
+
+        def score(pdf, aid, qids, packed):
+            import pandas as pd
+
+            isnull = np.array([v is None for v in pdf["v"]], dtype=bool)
+            a = np.vstack([
+                np.full(dim, np.nan) if n else np.asarray(v, dtype="float64")
+                for v, n in zip(pdf["v"], isnull)
+            ])
+            had_nan = np.isnan(a).any(axis=1) & ~isnull
+            eligible = aid[:, None] != qids[None, :]
+            pay = pd.DataFrame({"cv": pdf["v"].to_numpy(), "had_nan": had_nan})
+            return _cosines(a, *packed), eligible, had_nan[:, None] & eligible, pay
+
+        # qn-null guard: a NULL query vector makes the expression tier's
+        # score NULL even against a NaN-component row
+        d = F.col("qn") * V.norm("cv", dim)
+        rescore = F.when(
+            F.col("had_nan") & F.col("qn").isNotNull(), F.lit(float("nan"))
+        ).otherwise(F.when(d > 0, V.dot("qv", "cv", dim) / d))
+        stream = spread(corpus, id_col).select(
+            F.col(id_col).alias("id"), V.as_double(F.col(vec_col)).alias("v")
+        )
+        res = _select_topk(
+            stream, q, k, prep, score, "cv array<double>, had_nan boolean",
+            rescore,
+        )
         if res is not None:
             return res
-        # query side exceeded the broadcast budget — fall through to the
-        # expression path, which never collects the query frame
     # parallelism guard: the O(|Q| x corpus) scoring + per-partition
     # top-k sort run at the SCAN's parallelism — a single sub-128MB
     # embedding file executes the whole pair stage on one task (sf10:
@@ -92,233 +281,7 @@ def brute_force_topk(
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id", score.alias("score"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-    )
-
-
-#: _bf_topk_cosine_arrow collects/broadcasts the query side; past this
-#: budget it declines (returns None) and brute_force_topk falls back to
-#: the expression path, which keeps the query side as a Spark broadcast
-#: join and never materializes it on the driver.
-BF_TOPK_MAX_QUERIES = 10_000
-
-
-def _bf_topk_cosine_arrow(
-    corpus: DataFrame, q: DataFrame, k: int, id_col: str, vec_col: str, dim: int
-) -> DataFrame | None:
-    """Arrow-batched candidate selection for the exact cosine top-k.
-
-    The sf100 rehearsal exposed the expression path's ceiling: the
-    64-term unrolled dot generates a codegen method past HotSpot's
-    huge-method bytecode limit, so the O(|Q| x corpus) pair stage runs in
-    the BYTECODE INTERPRETER (~5.7us/pair — 57s for 10M pairs at sf100).
-    Here each Arrow batch scores against the broadcast query matrix with
-    one numpy matmul and keeps, per query, every row within 1e-9 of the
-    batch's k-th best (self-matches forced to -inf; NULL-vector rows —
-    NULL score, ranked LAST under ``desc`` on the expression path — kept
-    only when the batch has fewer than k finite candidates; non-NULL
-    rows with a NaN COMPONENT — NaN score, which Spark orders LARGER
-    than any value, so ranked FIRST — always kept). The
-    matmul only SELECTS candidates: survivors (~batches x |Q| x k rows)
-    are re-scored with the same fold/unrolled expressions as the
-    expression path — identical doubles, so ranking and the oracle hash
-    are unchanged. Measured at sf100 (2M corpus, 5 queries): 57s -> ~6s.
-    """
-    import numpy as np
-
-    qrows = q.select("query_id", "qv").limit(BF_TOPK_MAX_QUERIES + 1).collect()
-    if len(qrows) > BF_TOPK_MAX_QUERIES:
-        return None  # caller falls back to the expression path
-    if not qrows:
-        spark = corpus.sparkSession
-        return spark.createDataFrame(
-            [], "query_id bigint, neighbor_id bigint, score double, rank bigint"
-        )
-    qids = np.array([r[0] for r in qrows], dtype="int64")
-    # a NULL query vector becomes a NaN row: its score column is all-NaN,
-    # so selection keeps every non-self corpus row and the exact rescore
-    # (NULL qn -> NULL score, ranked last) mirrors the expression path
-    qmat = np.array(
-        [r[1] if r[1] is not None else [float("nan")] * dim for r in qrows],
-        dtype="float64",
-    )
-    qn = np.sqrt(np.einsum("ij,ij->i", qmat, qmat))
-    sc = corpus.sparkSession.sparkContext
-    b = sc.broadcast((qids, qmat, qn))
-
-    def gen(batches):
-        import pandas as pd
-
-        bqids, bqmat, bqn = b.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            # NULL corpus vectors score NaN against every query (the
-            # expression path gives them NULL scores ranked last); they
-            # stay candidates only via the <k-finite branch below. A NaN
-            # row also keeps np.vstack rectangular.
-            vals = [
-                np.asarray(v, dtype="float64")
-                if v is not None
-                else np.full(dim, np.nan)
-                for v in pdf["v"]
-            ]
-            a = np.vstack(vals)
-            aid = pdf["id"].to_numpy()
-            # non-NULL vectors CONTAINING a NaN component score NaN on the
-            # expression path too — and Spark orders NaN LARGER than any
-            # value, so `desc` ranks them FIRST (rank 1), unlike NULL
-            # vectors whose NULL score ranks last. Force-keep them as
-            # candidates; the exact rescore re-derives the NaN score and
-            # the window reproduces Spark's NaN-first ordering (ADVICE r8).
-            # The flag must ride ALONGSIDE the vector: the pandas->Arrow
-            # boundary masks NaN elements inside the emitted list to null
-            # (from_pandas semantics), so a re-emitted NaN-bearing vector
-            # would rescore to NULL (ranked last) — the flag lets the
-            # rescore re-create the NaN score as a literal instead.
-            comp_nan = np.isnan(a).any(axis=1) & ~np.array(
-                [v is None for v in pdf["v"]], dtype=bool
-            )
-            an = np.sqrt(np.einsum("ij,ij->i", a, a))
-            with np.errstate(divide="ignore", invalid="ignore"):
-                s = (a @ bqmat.T) / np.outer(an, bqn)
-            s[aid[:, None] == bqids[None, :]] = -np.inf  # self-matches
-            nan_mask = np.isnan(s)
-            s_sel = np.where(nan_mask, -np.inf, s)
-            out_q, out_n, out_v, out_h = [], [], [], []
-            for j in range(len(bqids)):
-                col = s_sel[:, j]
-                n_fin = int(np.isfinite(col).sum())
-                if n_fin >= k:
-                    kth = np.partition(col, len(col) - k)[len(col) - k]
-                    keep = np.where(
-                        (col >= kth - _CAND_EPS)
-                        | (comp_nan & (aid != bqids[j]))
-                    )[0]
-                else:
-                    # fewer than k finite scores in this batch: keep every
-                    # non-self row (incl. NULL-score ones — the expression
-                    # path ranks them last rather than dropping them)
-                    keep = np.where(aid != bqids[j])[0]
-                out_q.extend([bqids[j]] * len(keep))
-                out_n.extend(aid[keep].tolist())
-                # emit the ORIGINAL vector (None stays None) — a NaN
-                # stand-in would rescore to NaN, which desc-sorts FIRST
-                # in Spark, while the expression path's NULL sorts last
-                out_v.extend(
-                    None if pdf["v"].iloc[i] is None else a[i].tolist()
-                    for i in keep
-                )
-                out_h.extend(bool(comp_nan[i]) for i in keep)
-            yield pd.DataFrame(
-                {
-                    "query_id": pd.Series(out_q, dtype="int64"),
-                    "neighbor_id": pd.Series(out_n, dtype="int64"),
-                    "cv": pd.Series(out_v, dtype=object),
-                    "had_nan": pd.Series(out_h, dtype=bool),
-                }
-            )
-
-    from .partitioning import spread
-
-    cands = (
-        spread(corpus, id_col)
-        .select(
-            F.col(id_col).alias("id"), V.as_double(F.col(vec_col)).alias("v")
-        )
-        .mapInPandas(
-            gen,
-            "query_id long, neighbor_id long, cv array<double>,"
-            " had_nan boolean",
-        )
-    )
-    # exact rescoring: the SAME expressions (and dim arguments) the
-    # expression path uses, on the tiny survivor set. had_nan rows get a
-    # LITERAL NaN — exactly the value the expression path computes for a
-    # NaN-component vector (NaN/NaN) — because their re-emitted vector
-    # lost its NaN to the Arrow null mask and would rescore to NULL.
-    rescored = (
-        cands.join(F.broadcast(q), "query_id")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cn", V.norm("cv", dim))
-    )
-    d = F.col("qn") * F.col("cn")
-    # qn-null guard: a NULL query vector makes d NULL on the expression
-    # path (NULL * NaN = NULL -> score NULL, ranked last) even against a
-    # NaN-component corpus row, so the literal only fires when qn exists.
-    score = F.when(
-        F.col("had_nan") & F.col("qn").isNotNull(), F.lit(float("nan"))
-    ).otherwise(F.when(d > 0, V.dot("qv", "cv", dim) / d))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
-    )
-    return (
-        rescored.select("query_id", "neighbor_id", score.alias("score"))
-        .withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-    )
-
-
-def lsh_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    bucket_length: float = 2.0,
-    num_hash_tables: int = 4,
-    seed: int = 42,
-) -> DataFrame:
-    """Approximate top-k via random-projection LSH buckets (spark.ml).
-
-    Candidates come from bucket joins across ``num_hash_tables`` tables;
-    exact cosine is computed only on candidates. Recall < 1.0 by design —
-    rows-only verification plus a recall test against brute force.
-    """
-    from pyspark.ml.feature import BucketedRandomProjectionLSH
-    from pyspark.ml.functions import array_to_vector
-
-    c = corpus.select(
-        F.col(id_col).alias("cid"),
-        F.col(vec_col).alias("craw"),
-        array_to_vector(V.as_double(F.col(vec_col))).alias("features"),
-    )
-    q = queries.select(
-        F.col(id_col).alias("qid"),
-        F.col(vec_col).alias("qraw"),
-        array_to_vector(V.as_double(F.col(vec_col))).alias("features"),
-    )
-    lsh = BucketedRandomProjectionLSH(
-        inputCol="features",
-        outputCol="hashes",
-        bucketLength=bucket_length,
-        numHashTables=num_hash_tables,
-        seed=seed,
-    )
-    model = lsh.fit(c)
-    # Large threshold: LSH buckets do the pruning; distance filter is loose.
-    pairs = model.approxSimilarityJoin(q, c, float("inf"), distCol="l2")
-    scored = (
-        pairs.select(
-            F.col("datasetA.qid").alias("query_id"),
-            F.col("datasetB.cid").alias("neighbor_id"),
-            V.cosine(
-                V.as_double(F.col("datasetA.qraw")),
-                V.as_double(F.col("datasetB.craw")),
-            ).alias("score"),
-        )
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-    )
+    return _topk(scored, k)
 
 
 def _rp_keys_seq(mat, planes, bucket_length: float):
@@ -336,27 +299,62 @@ def _rp_keys_seq(mat, planes, bucket_length: float):
     return np.floor(acc / float(bucket_length)).astype("int64")
 
 
-def _rp_topk_arrow(
+def rp_bucket_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    planes,
-    k: int,
-    dim: int,
-    bucket_length: float,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame | None:
-    """One-pass Arrow candidate stage for :func:`rp_bucket_topk` — see
-    its ``arrow_keys`` docstring for semantics and the measured rationale.
-    Returns None when it declines — query side past the broadcast budget,
-    or a non-integral id column (ids ride Arrow as int64; ADVICE r8:
-    decline like the budget path instead of hard-failing, so string-id
-    callers get the expression plan rather than a TypeError)."""
+    k: int = 10,
+    dim: int = 64,
+    n_tables: int = 8,
+    bucket_length: float = 4.0,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    seed: int = 42,
+) -> DataFrame:
+    """Approximate top-k via deterministic bucketed random projections —
+    the E2LSH scheme, on md5-derived Rademacher planes so a second
+    engine can replay it.
+
+    Per table ``t``: key = floor(dot(v, plane_t) / bucket_length); a
+    corpus row is a candidate for a query iff they share a (table, key)
+    bucket. Exact cosine is computed on candidates only and the final
+    rank uses the exact score, so bucketing affects recall, never an
+    emitted value. Gaussian planes drawn from a JVM RNG (spark.ml's
+    BucketedRandomProjectionLSH) are replayable by no other engine;
+    Achlioptas-style +-1 planes give the same LSH family guarantee with
+    every entry an md5 literal (:func:`sign_planes`), which is what makes
+    the ann_lsh_topk registry query hash-verifiable against a generated
+    DuckDB twin. Tune ``bucket_length`` down / ``n_tables`` up for
+    sparser buckets at scale.
+
+    Arrow tier, taken whenever :func:`_select_topk` accepts (integral
+    ids, at most BF_TOPK_MAX_QUERIES queries): ONE corpus pass. The
+    broadcast query side carries its bucket keys; each corpus batch
+    computes its own keys with a SEQUENTIAL d-loop of vectorized
+    multiply-adds, the identical IEEE-754 op order as the fold
+    expression, so every projection (and floor key) is bit-identical BY
+    CONSTRUCTION, not epsilon-close. Pairs that share no bucket are
+    masked out and the selector keeps each query's near-k-th-best
+    candidates for the exact fold cosine (pin-tested end-to-end against
+    the expression tier, incl. a planted floor-boundary corpus). Measured
+    against the expression tier's bucket equi-join + candidate
+    ``.distinct()``, which shuffles two full vectors per candidate row:
+    sf0.01 1.28s -> 0.58s wall, sf100 59.7-99.7s -> 1.8s.
+
+    Expression tier (string ids, or a query side past the budget): the
+    projection is a fold EXPRESSION, 0.0 + v[0]*p0 + v[1]*p1 + ...,
+    accumulating left-to-right exactly like the twin's inlined
+    (+v[1]-v[2]...) sum; candidates come from a bucket equi-join.
+
+    NaN COMPONENTS are out-of-contract for this operator (unlike
+    brute_force_topk, which reproduces Spark's NaN-first ranking): a NaN
+    projection's bucket key is engine-undefined on BOTH plans — Java
+    ``floor(NaN)`` casts to 0 while numpy ``astype('int64')`` of NaN is
+    INT64_MIN — so there is no single candidate set to preserve.
+    Validate or impute NaN-bearing vectors upstream.
+    """
     import numpy as np
 
-    id_type = dict(corpus.dtypes).get(id_col, "")
-    if id_type not in ("tinyint", "smallint", "int", "bigint"):
-        return None  # expression plan handles arbitrary id types
+    planes = sign_planes(seed, dim, n_tables)
 
     def _dim_check(vals):
         bad = [
@@ -369,162 +367,41 @@ def _rp_topk_arrow(
                 f"rp_bucket_topk: expected dim={dim}, got {bad[0]}"
             )
 
+    def prep(rows):
+        _dim_check([r["qv"] for r in rows])
+        qmat = np.array([r["qv"] for r in rows], dtype="float64")
+        qn = np.sqrt(np.einsum("ij,ij->i", qmat, qmat))
+        return qmat, qn, _rp_keys_seq(qmat, planes, bucket_length)
+
+    def score(pdf, aid, qids, packed):
+        import pandas as pd
+
+        qmat, qn, qkeys = packed
+        _dim_check(list(pdf["v"]))
+        a = np.vstack([np.asarray(v, dtype="float64") for v in pdf["v"]])
+        keys = _rp_keys_seq(a, planes, bucket_length)
+        # candidate iff ANY table key matches — exactly the bucket
+        # equi-join + distinct of the expression tier
+        cand = (keys[:, None, :] == qkeys[None, :, :]).any(axis=2)
+        cand &= aid[:, None] != qids[None, :]
+        pay = pd.DataFrame({"nv": pdf["v"].to_numpy()})
+        return _cosines(a, qmat, qn), cand, None, pay
+
+    from .partitioning import spread
+
     q = queries.select(
         F.col(id_col).alias("query_id"),
         V.as_double(F.col(vec_col)).alias("qv"),
     )
-    qrows = q.limit(BF_TOPK_MAX_QUERIES + 1).collect()
-    if len(qrows) > BF_TOPK_MAX_QUERIES:
-        return None
-    spark = corpus.sparkSession
-    if not qrows:
-        return spark.createDataFrame(
-            [], "query_id bigint, neighbor_id bigint, score double, rank bigint"
-        )
-    _dim_check([r["qv"] for r in qrows])
-    qids = np.array([r["query_id"] for r in qrows], dtype="int64")
-    qmat = np.array([r["qv"] for r in qrows], dtype="float64")
-    qkeys = _rp_keys_seq(qmat, planes, bucket_length)  # (nq, n_tables)
-    qn = np.sqrt(np.einsum("ij,ij->i", qmat, qmat))
-    b = spark.sparkContext.broadcast((qids, qmat, qkeys, qn))
-
-    def gen(batches):
-        import pandas as pd
-
-        bqids, bqmat, bqkeys, bqn = b.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            _dim_check(list(pdf["v"]))
-            a = np.vstack([np.asarray(v, dtype="float64") for v in pdf["v"]])
-            aid = pdf["id"].to_numpy()
-            keys = _rp_keys_seq(a, planes, bucket_length)  # (n, n_tables)
-            # candidate iff ANY table key matches — exactly the bucket
-            # equi-join + distinct of the expression plan
-            cand = (keys[:, None, :] == bqkeys[None, :, :]).any(axis=2)
-            cand &= aid[:, None] != bqids[None, :]  # self-filter
-            an = np.sqrt(np.einsum("ij,ij->i", a, a))
-            with np.errstate(divide="ignore", invalid="ignore"):
-                s = (a @ bqmat.T) / np.outer(an, bqn)
-            s[~cand] = -np.inf
-            nan_mask = np.isnan(s) & cand
-            s_sel = np.where(nan_mask, -np.inf, s)
-            out_q, out_n, out_v = [], [], []
-            for j in range(len(bqids)):
-                col = s_sel[:, j]
-                n_fin = int(np.isfinite(col).sum())
-                if n_fin >= k:
-                    kth = np.partition(col, len(col) - k)[len(col) - k]
-                    keep = np.where(col >= kth - _CAND_EPS)[0]
-                else:
-                    # fewer than k finite candidate scores in this batch:
-                    # keep every candidate (incl. NULL-score ones — the
-                    # expression plan ranks them last rather than
-                    # dropping them)
-                    keep = np.where(cand[:, j])[0]
-                out_q.extend([bqids[j]] * len(keep))
-                out_n.extend(aid[keep].tolist())
-                out_v.extend(a[i].tolist() for i in keep)
-            yield pd.DataFrame(
-                {
-                    "query_id": pd.Series(out_q, dtype="int64"),
-                    "neighbor_id": pd.Series(out_n, dtype="int64"),
-                    "nv": pd.Series(out_v, dtype=object),
-                }
-            )
-
-    from .partitioning import spread
-
-    cands = (
-        spread(corpus, id_col)
-        .select(
-            F.col(id_col).alias("id"), V.as_double(F.col(vec_col)).alias("v")
-        )
-        .mapInPandas(gen, "query_id long, neighbor_id long, nv array<double>")
+    stream = spread(corpus, id_col).select(
+        F.col(id_col).alias("id"), V.as_double(F.col(vec_col)).alias("v")
     )
-    rescored = cands.join(F.broadcast(q), "query_id").select(
-        "query_id",
-        "neighbor_id",
-        V.cosine(F.col("qv"), F.col("nv")).alias("score"),
+    res = _select_topk(
+        stream, q, k, prep, score, "nv array<double>",
+        V.cosine(F.col("qv"), F.col("nv")),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
-    )
-    return (
-        rescored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-    )
-
-
-def rp_bucket_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    dim: int = 64,
-    n_tables: int = 8,
-    bucket_length: float = 4.0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-    arrow_keys: bool = False,
-) -> DataFrame:
-    """Approximate top-k via deterministic bucketed random projections —
-    the E2LSH scheme :func:`lsh_topk` gets from spark.ml, rebuilt on
-    md5-derived Rademacher planes so a second engine can replay it.
-
-    Per table ``t``: key = floor(dot(v, plane_t) / bucket_length); a
-    corpus row is a candidate for a query iff they share a (table, key)
-    bucket. Exact cosine is computed on candidates only and the final
-    rank uses the exact score, so bucketing affects recall, never an
-    emitted value. spark.ml's BucketedRandomProjectionLSH draws Gaussian
-    planes from a JVM RNG no other engine can replay; Achlioptas-style
-    +-1 planes give the same LSH family guarantee with every entry an
-    md5 literal (:func:`sign_planes`), which is what makes the
-    ann_lsh_topk registry query hash-verifiable against a generated
-    DuckDB twin.
-
-    The projection is a fold EXPRESSION (not numpy): 0.0 + v[0]*p0 +
-    v[1]*p1 + ... accumulates left-to-right exactly like the twin's
-    inlined (+v[1]-v[2]...) sum, so bucket keys are bit-identical across
-    engines — a numpy MATMUL's SIMD summation could flip a key on a
-    floor boundary. O(dim * n_tables) interpreted work per row, once per
-    row, narrow output; candidate generation is a bucket equi-join, so
-    the shape scales the same way the banded-MinHash path does. Tune
-    ``bucket_length`` down / ``n_tables`` up for sparser buckets at
-    scale.
-
-    ``arrow_keys=True`` replaces the whole candidate stage with ONE
-    Arrow-batched corpus pass (the bf/_bf_topk_cosine_arrow shape): the
-    broadcast query side carries its bucket keys, each corpus batch
-    computes its own keys with a SEQUENTIAL d-loop of vectorized
-    multiply-adds — the identical IEEE-754 op order as the fold
-    expression, so every projection (and floor key) is bit-identical BY
-    CONSTRUCTION, not epsilon-close — masks non-bucket-sharing pairs
-    out, and keeps per query every candidate within _CAND_EPS of the
-    batch's k-th best cosine. The exact fold cosine re-scores survivors
-    and the window ranks them, so output is identical to the expression
-    plan (pin-tested end-to-end, incl. a planted floor-boundary corpus).
-    NaN COMPONENTS are out-of-contract for this operator (unlike
-    brute_force_topk, which reproduces Spark's NaN-first ranking): a NaN
-    projection's bucket key is engine-undefined on BOTH plans — Java
-    ``floor(NaN)`` casts to 0 while numpy ``astype('int64')`` of NaN is
-    INT64_MIN — so there is no single candidate set to preserve.
-    Validate or impute NaN-bearing vectors upstream.
-    Why this beats fixing the keys alone: with generous buckets most of
-    the corpus is a candidate, and the expression plan's candidate
-    ``.distinct()`` shuffles two full vectors per candidate row (sf100:
-    ~60s after Arrow keys, ~100s before); the one-pass mask never
-    materializes candidates at all. Requires an integral id column (ids
-    ride Arrow as int64) and collects/broadcasts the query side — past
-    BF_TOPK_MAX_QUERIES rows it falls back to the expression plan.
-    """
-    planes = sign_planes(seed, dim, n_tables)
-    if arrow_keys:
-        res = _rp_topk_arrow(
-            corpus, queries, planes, k, dim, bucket_length, id_col, vec_col,
-        )
-        if res is not None:
-            return res
+    if res is not None:
+        return res
 
     def _keys(df: DataFrame, idname: str) -> DataFrame:
         v0 = V.as_double(F.col(vec_col))
@@ -564,26 +441,18 @@ def rp_bucket_topk(
         .select("query_id", "qv", "neighbor_id", "nv")
         .distinct()
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
+    return _topk(
         cand.select(
             "query_id",
             "neighbor_id",
             V.cosine(F.col("qv"), F.col("nv")).alias("score"),
-        )
-        .withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
+        ),
+        k,
     )
-
 
 #: Hard cap on :func:`cosine_pairs` input — it is the O(n^2) *verification
 #: baseline*; past this size the caller wants :func:`embedding_cosine_dupes`.
 COSINE_PAIRS_MAX_ROWS = 100_000
-
-#: Candidate slack: numpy's SIMD-pairwise dot accumulates in a different
-#: order than the emitted fold-expression score, so candidates are found at
-#: ``threshold - EPS`` and the exact filter happens on the fold score.
-_CAND_EPS = 1e-9
 
 
 def cosine_pairs(
@@ -641,9 +510,7 @@ def cosine_pairs(
                 continue
             a = np.vstack([np.asarray(v, dtype="float64") for v in pdf["v"]])
             aid = pdf["id"].to_numpy()
-            an = np.sqrt(np.einsum("ij,ij->i", a, a))
-            with np.errstate(divide="ignore", invalid="ignore"):
-                s = (a @ bmat.T) / np.outer(an, bnrm)
+            s = _cosines(a, bmat, bnrm)
             ia, ib = np.where((s >= cand_cut) & (aid[:, None] < bids[None, :]))
             yield pd.DataFrame(
                 {
@@ -820,30 +687,14 @@ def _nearest_cell(
     scale hazard: N x K intermediate rows each carrying the vector.
     SemDeDup's corpus-scaled K makes that O(N^2/target_cell) — at sf100
     (2M vectors, K=3906) 7.8e9 wide rows filled this box's scratch and
-    died in spill before any scoring. The large-K path instead proposes
-    candidate cells per row with one Arrow-batched numpy distance pass
-    (every cell within 1e-9 of the row's minimum squared distance — a
-    superset of the exact argmin, since numpy/expression doubles agree to
-    ~1e-15), then replays the SAME exact-expression distance + min_by
-    tie-break on the ~N proposed rows. Identical assignments by
-    construction (verified: sf10 semantic_dedup_survivors value hash
-    unchanged); the K <= threshold plan is untouched."""
-    if _centroid_count(centroids) > _NEAREST_CELL_ARROW_K:
-        return _nearest_cell_arrow(c, centroids, id_col, dim)
-    scored = c.crossJoin(F.broadcast(centroids)).select(
-        id_col,
-        "v",
-        "cell",
-        V.euclidean("v", "centroid", dim).alias("dist"),
-    )
-    return (
-        scored.groupBy(id_col)
-        .agg(
-            F.min_by(
-                F.struct("cell", "v"), F.struct("dist", "cell")
-            ).alias("__best")
-        )
-        .select(id_col, F.col("__best.cell").alias("cell"), F.col("__best.v").alias("v"))
+    died in spill before any scoring. There the candidate cells come from
+    :func:`_propose_cells` instead, and the SAME exact-expression
+    distance + min_by tie-break run on the ~N proposed rows. Identical
+    assignments by construction (verified: sf10 semantic_dedup_survivors
+    value hash unchanged)."""
+    return _argmin_cell(
+        c, centroids, id_col, "v", "cell", dim=dim,
+        propose=_centroid_count(centroids) > _NEAREST_CELL_ARROW_K,
     )
 
 
@@ -861,74 +712,107 @@ def _centroid_count(centroids: DataFrame) -> int:
     return centroids.count()
 
 
-def _nearest_cell_arrow(
-    c: DataFrame, centroids: DataFrame, id_col: str, dim: int | None
+def _argmin_cell(
+    rows: DataFrame,
+    centroids: DataFrame,
+    id_col: str,
+    vec: str,
+    cell: str,
+    part: str | None = None,
+    dim: int | None = None,
+    propose: bool = False,
 ) -> DataFrame:
-    """Large-K nearest-centroid: numpy proposes, the exact expression
-    disposes (same selection-vs-scoring split as cosine_pairs /
-    brute_force_topk / semantic_dedup_pairs)."""
-    import numpy as np
+    """Nearest centroid per row of ``rows`` (``id_col``, ``part``,
+    ``vec``): (``id_col``, ``part``, ``cell``, ``vec``) with ``cell`` the
+    argmin of the exact euclidean fold against ``centroids`` (``part``,
+    ``cell``, ``centroid``), ties to the lower cell. ``part`` (PQ's
+    subspace) restricts each row to its own part's centroids. With
+    ``propose`` only the cells :func:`_propose_cells` proposes are
+    scored, which yields the same assignment."""
+    keys = [id_col] + ([part] if part else [])
+    if propose:
+        pairs = _propose_cells(rows, centroids, vec, cell, part).join(
+            F.broadcast(centroids), keys[1:] + [cell]
+        )
+    elif part:
+        pairs = rows.join(F.broadcast(centroids), part)
+    else:
+        pairs = rows.crossJoin(F.broadcast(centroids))
+    scored = pairs.select(
+        *keys, vec, cell, V.euclidean(vec, "centroid", dim).alias("dist")
+    )
+    return (
+        scored.groupBy(*keys)
+        .agg(
+            F.min_by(
+                F.struct(cell, vec), F.struct("dist", cell)
+            ).alias("__best")
+        )
+        .select(
+            *keys,
+            F.col(f"__best.{cell}").alias(cell),
+            F.col(f"__best.{vec}").alias(vec),
+        )
+    )
 
-    crows = centroids.select("cell", "centroid").collect()
-    cells = np.array([r[0] for r in crows], dtype="int64")
-    cmat = np.array([r[1] for r in crows], dtype="float64")
-    c2 = np.einsum("ij,ij->i", cmat, cmat)
-    sc = c.sparkSession.sparkContext
-    b = sc.broadcast((cells, cmat, c2))
+
+def _propose_cells(
+    rows: DataFrame, centroids: DataFrame, vec: str, cell: str, part: str | None
+) -> DataFrame:
+    """Arrow tier of nearest-centroid assignment: ``rows`` with one row
+    per proposed ``cell``. Per Arrow batch, numpy computes squared
+    distances from each ``vec`` to every centroid of its ``part`` and
+    proposes every cell within a scale-aware ``_CAND_EPS`` band of the
+    row's minimum: a superset of the exact argmin, since numpy and the
+    expression agree to ~1e-15. The K centroids are collected (driver-
+    tiny by construction) and broadcast."""
+    import numpy as np
+    from pyspark.sql.types import StructType
+
+    by_part: dict = {}
+    for r in centroids.collect():
+        by_part.setdefault(r[part] if part else None, []).append(
+            (r[cell], r["centroid"])
+        )
+    packed = {}
+    for p, items in by_part.items():
+        mat = np.array([v for _, v in items], dtype="float64")
+        packed[p] = (
+            np.array([c for c, _ in items]),
+            mat,
+            np.einsum("ij,ij->i", mat, mat),
+        )
+    b = rows.sparkSession.sparkContext.broadcast(packed)
 
     def gen(batches):
         import pandas as pd
 
-        bcells, bcmat, bc2 = b.value
+        pk = b.value
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            a = np.vstack([np.asarray(v, dtype="float64") for v in pdf["v"]])
-            # squared distances via the expansion; monotone with the exact
-            # expression's sqrt distance, ulp-close to its square
-            d2 = (
-                np.einsum("ij,ij->i", a, a)[:, None]
-                - 2.0 * (a @ bcmat.T)
-                + bc2[None, :]
-            )
-            # scale-aware margin: the expansion form above can lose
-            # ~eps*|a|^2 to cancellation vs the expression's direct
-            # sum-of-squares, so the proposal band widens with magnitude
-            dmin = d2.min(axis=1)[:, None]
-            ri, ci = np.where(d2 <= dmin + _CAND_EPS * (1.0 + np.abs(dmin)))
-            yield pd.DataFrame(
-                {
-                    "__nc_id": pdf["id"].to_numpy()[ri],
-                    "cand_cell": bcells[ci],
-                    "v": pd.Series(
-                        [pdf["v"].iloc[int(i)] for i in ri], dtype=object
-                    ),
-                }
-            )
+            out = []
+            groups = pdf.groupby(part, sort=False) if part else [(None, pdf)]
+            for p, grp in groups:
+                cells, cmat, c2 = pk[p]
+                a = np.vstack([np.asarray(v, dtype="float64") for v in grp[vec]])
+                # squared distances via the expansion; monotone with the
+                # exact expression's sqrt distance, ulp-close to its square
+                d2 = (
+                    np.einsum("ij,ij->i", a, a)[:, None]
+                    - 2.0 * (a @ cmat.T)
+                    + c2[None, :]
+                )
+                # scale-aware margin: the expansion can lose ~eps*|a|^2 to
+                # cancellation against the expression's direct sum of
+                # squares, so the band widens with magnitude
+                dmin = d2.min(axis=1)[:, None]
+                ri, ci = np.where(d2 <= dmin + _CAND_EPS * (1.0 + np.abs(dmin)))
+                out.append(grp.iloc[ri].assign(**{cell: cells[ci]}))
+            yield pd.concat(out, ignore_index=True)
 
-    cands = c.select(
-        F.col(id_col).alias("id"), F.col("v")
-    ).mapInPandas(gen, "__nc_id long, cand_cell long, v array<double>")
-    scored = cands.join(
-        F.broadcast(centroids),
-        cands["cand_cell"] == centroids["cell"],
-    ).select(
-        F.col("__nc_id").alias(id_col),
-        "v",
-        "cell",
-        V.euclidean("v", "centroid", dim).alias("dist"),
-    )
-    return (
-        scored.groupBy(id_col)
-        .agg(
-            F.min_by(
-                F.struct("cell", "v"), F.struct("dist", "cell")
-            ).alias("__best")
-        )
-        .select(
-            id_col, F.col("__best.cell").alias("cell"), F.col("__best.v").alias("v")
-        )
-    )
+    schema = StructType(rows.schema.fields + [centroids.schema[cell]])
+    return rows.mapInPandas(gen, schema)
 
 
 #: Lloyd training points per centroid. FAISS trains IVF coarse quantizers
@@ -1124,11 +1008,7 @@ def ivf_topk(
         F.col(id_col).alias("neighbor_id"),
         F.when(pair_d > 0, V.dot("qv", "v", dim) / pair_d).alias("score"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-    )
+    return _topk(scored, k)
 
 # --- SemDeDup: semantic dedup over embedding clusters ------------------------
 
@@ -1149,10 +1029,11 @@ def semantic_dedup_pairs(
     compare vectors only against members of the SAME cell.
 
     Output: (cell, id_a, id_b, score) with id_a < id_b and cosine >=
-    ``threshold``. Scale shape: candidacy is an equi-join on ``cell`` —
-    pair count is sum over cells of |cell|^2, never corpus^2; n_cells
-    grows with the corpus so cells stay bounded. The cluster step is the
-    same broadcast-centroid argmin the ANN path uses; no UDF, no collect.
+    ``threshold``. Scale shape: pairing is ONE grouped Arrow pass per
+    cell (``applyInPandas``), never a self-join — pair work is the sum
+    over cells of |cell|^2, never corpus^2; n_cells grows with the corpus
+    so cells stay bounded. The cluster step is the same broadcast-centroid
+    argmin the ANN path uses.
     """
     assignments, cents = ivf_assign(
         corpus, n_cells, id_col, vec_col, refine_iterations, centroids
@@ -1238,7 +1119,7 @@ def semantic_dedup_pairs(
     # (id_a long, id_b long); a non-numeric id would cast to NULL silently
     # (non-ANSI) and corrupt the pair set — refuse instead of guessing
     id_type = dict(assignments.dtypes).get(id_col, "")
-    if id_type not in ("tinyint", "smallint", "int", "bigint"):
+    if id_type not in _INTEGRAL:
         raise TypeError(
             f"semantic_dedup_pairs requires an integral id column; got"
             f" {id_col}: {id_type}. Map ids to bigint upstream (e.g."
@@ -1347,7 +1228,6 @@ def pq_train_encode(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     refine_iterations: int = 2,
-    arrow_assign: bool = False,
     materialize: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """Product-quantization codebooks + corpus codes (Jegou et al. 2011,
@@ -1367,7 +1247,11 @@ def pq_train_encode(
 
     Scale shape: training is groupBy (j, code, pos) averages over the
     exploded corpus — partial aggregation applies; encoding is a broadcast
-    join + per-(id, j) argmin. No UDF, no collect, no per-subspace jobs.
+    join + per-(id, j) argmin, no per-subspace jobs. Once the corpus plan
+    estimate reaches ``_ARROW_MIN_BYTES`` the argmin scores only the codes
+    :func:`_propose_cells` proposes per subspace instead of rows x
+    k_codes interpreted euclideans; the exact fold distance + min_by
+    tie-break still decide, so assignments are identical (pin-tested).
 
     The subvector table is persisted and stays cached while the returned
     lazy ``codes``/``codebooks`` are alive (they reference it; every
@@ -1379,13 +1263,7 @@ def pq_train_encode(
 
     from .partitioning import spread
 
-    if arrow_assign:
-        id_type = dict(corpus.dtypes).get(id_col, "")
-        if id_type not in ("tinyint", "smallint", "int", "bigint"):
-            raise TypeError(
-                f"pq_train_encode(arrow_assign=True) requires an integral"
-                f" id column; got {id_col}: {id_type}"
-            )
+    arrow = _plan_bytes(corpus) >= _ARROW_MIN_BYTES
     # materialize-before-reuse: every Lloyd round AND the final encode
     # re-reference the subvector table — without the persist the scan +
     # normalize + split would re-execute per use (and on a one-file local
@@ -1432,104 +1310,10 @@ def pq_train_encode(
         "j", F.posexplode("top").alias("code", "c")
     ).select("j", "code", F.col("c.sv").alias("centroid"))
 
-    def _propose(cb: DataFrame) -> DataFrame:
-        """Arrow candidate proposal for the encode argmin: numpy squared
-        distances per subspace propose every code within a scale-aware
-        epsilon of each row's minimum (a superset of the exact argmin —
-        same split as _nearest_cell_arrow), shrinking the scored relation
-        from rows*k_codes interpreted euclideans to ~rows. The exact
-        fold distance + min_by tie-break dispose below, so assignments
-        are identical to the crossJoin plan by construction (pin-tested
-        in tests/test_similarity.py)."""
-        import numpy as np
-
-        rows = cb.collect()  # m*k_codes rows — driver-tiny by contract
-        by_j: dict[int, list] = {}
-        for r in rows:
-            by_j.setdefault(r["j"], []).append((r["code"], r["centroid"]))
-        packed = {}
-        for j, items in by_j.items():
-            codes = np.array([c for c, _ in items], dtype="int64")
-            mat = np.array([v for _, v in items], dtype="float64")
-            packed[j] = (codes, mat, np.einsum("ij,ij->i", mat, mat))
-        b = sub.sparkSession.sparkContext.broadcast(packed)
-
-        def gen(batches):
-            import pandas as pd
-
-            pk = b.value
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                out_id, out_j, out_sv, out_code = [], [], [], []
-                for j, grp in pdf.groupby("j"):
-                    codes, mat, c2 = pk[int(j)]
-                    a = np.vstack(
-                        [np.asarray(v, dtype="float64") for v in grp["sv"]]
-                    )
-                    d2 = (
-                        np.einsum("ij,ij->i", a, a)[:, None]
-                        - 2.0 * (a @ mat.T)
-                        + c2[None, :]
-                    )
-                    dmin = d2.min(axis=1)[:, None]
-                    ri, ci = np.where(
-                        d2 <= dmin + _CAND_EPS * (1.0 + np.abs(dmin))
-                    )
-                    ids = grp["id"].to_numpy()
-                    svs = grp["sv"].reset_index(drop=True)
-                    out_id.extend(ids[ri].tolist())
-                    out_j.extend([int(j)] * len(ri))
-                    out_sv.extend(svs.iloc[int(i)] for i in ri)
-                    out_code.extend(codes[ci].tolist())
-                yield pd.DataFrame(
-                    {
-                        "id": pd.Series(out_id, dtype="int64"),
-                        "j": pd.Series(out_j, dtype="int32"),
-                        "sv": pd.Series(out_sv, dtype=object),
-                        "code": pd.Series(out_code, dtype="int32"),
-                    }
-                )
-
-        return (
-            sub.select(F.col(id_col).alias("id"), "j", "sv")
-            .mapInPandas(gen, "id long, j int, sv array<double>, code int")
-            .select(F.col("id").alias(id_col), "j", "sv", "code")
-        )
-
     def _assign(cb: DataFrame) -> DataFrame:
-        if arrow_assign:
-            scored = _propose(cb).join(F.broadcast(cb), ["j", "code"]).select(
-                id_col,
-                "j",
-                "sv",
-                "code",
-                V.euclidean(F.col("sv"), F.col("centroid")).alias("dist"),
-            )
-        else:
-            scored = sub.join(F.broadcast(cb), "j").select(
-                id_col,
-                "j",
-                "sv",
-                "code",
-                V.euclidean(F.col("sv"), F.col("centroid")).alias("dist"),
-            )
         # min_by hash agg, not a row_number window: map-side combine
         # shrinks the shuffle to one row per (id, j) and skips the sort.
-        return (
-            scored.groupBy(id_col, "j")
-            .agg(
-                F.min_by(
-                    F.struct("sv", "code"), F.struct("dist", "code")
-                ).alias("__best")
-            )
-            .select(
-                id_col,
-                "j",
-                F.col("__best.sv").alias("sv"),
-                F.col("__best.code").alias("code"),
-            )
-        )
+        return _argmin_cell(sub, cb, id_col, "sv", "code", "j", propose=arrow)
 
     # Checkpoint the (tiny, m*k_codes-row) codebooks each round: every
     # Lloyd step and BOTH downstream consumers (codes + the query table)
@@ -1573,92 +1357,6 @@ def pq_train_encode(
     return codes, codebooks
 
 
-def _pq_adc_candidates(
-    codes: DataFrame,
-    qtab: DataFrame,
-    id_col: str,
-    m: int,
-    k_codes: int,
-    keep_n: int,
-) -> DataFrame | None:
-    """Arrow per-batch candidate selection for the PQ-ADC rank stage.
-
-    Per Arrow batch of corpus codes, numpy computes each query's ADC
-    scores by a SEQUENTIAL j-loop of lookup-adds — the identical IEEE op
-    order as the fold expression, so batch-kth cuts are taken on exactly
-    the doubles the rescore will emit — and keeps every non-self row
-    within _CAND_EPS of the batch's keep_n-th best (all rows when a batch
-    has fewer than keep_n). The union over batches is a superset of the
-    global top-``keep_n`` per query, so the downstream exact-fold rescore
-    + row_number window reproduce the full plan's output exactly.
-    Declines (returns None) when the query side exceeds the broadcast
-    budget — caller keeps the crossJoin plan.
-    """
-    import numpy as np
-
-    qrows = qtab.limit(BF_TOPK_MAX_QUERIES + 1).collect()
-    if len(qrows) > BF_TOPK_MAX_QUERIES:
-        return None
-    if not qrows:
-        spark = codes.sparkSession
-        return spark.createDataFrame(
-            [], "query_id bigint, neighbor_id bigint, codes array<int>"
-        )
-    qids = np.array([r["query_id"] for r in qrows], dtype="int64")
-    # flat (|Q|, m*k_codes) table; holes (codes emptied by Lloyd rounds)
-    # stay NaN and are never indexed — every corpus code exists in qtab
-    qt = np.full((len(qrows), m * k_codes), np.nan, dtype="float64")
-    for qi, r in enumerate(qrows):
-        for slot, tv in r["qtab"].items():
-            qt[qi, slot] = tv
-    offs = np.arange(m, dtype="int64") * k_codes
-    b = codes.sparkSession.sparkContext.broadcast((qids, qt, offs))
-
-    def gen(batches):
-        import pandas as pd
-
-        bqids, bqt, boffs = b.value
-        nq = len(bqids)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            cd = np.vstack(
-                [np.asarray(c, dtype="int64") for c in pdf["codes"]]
-            )
-            aid = pdf["id"].to_numpy()
-            slots = cd + boffs[None, :]
-            # sequential accumulation over j — same order as the fold
-            s = np.zeros((len(cd), nq), dtype="float64")
-            for j in range(slots.shape[1]):
-                s = s + bqt[:, slots[:, j]].T
-            s[aid[:, None] == bqids[None, :]] = -np.inf  # self rows
-            out_q, out_n, out_c = [], [], []
-            for qi in range(nq):
-                col = s[:, qi]
-                n_fin = int(np.isfinite(col).sum())
-                if n_fin >= keep_n:
-                    kth = np.partition(col, len(col) - keep_n)[
-                        len(col) - keep_n
-                    ]
-                    keep = np.where(col >= kth - _CAND_EPS)[0]
-                else:
-                    keep = np.where(aid != bqids[qi])[0]
-                out_q.extend([bqids[qi]] * len(keep))
-                out_n.extend(aid[keep].tolist())
-                out_c.extend(cd[i].tolist() for i in keep)
-            yield pd.DataFrame(
-                {
-                    "query_id": pd.Series(out_q, dtype="int64"),
-                    "neighbor_id": pd.Series(out_n, dtype="int64"),
-                    "codes": pd.Series(out_c, dtype=object),
-                }
-            )
-
-    return codes.select(
-        F.col(id_col).alias("id"), "codes"
-    ).mapInPandas(gen, "query_id long, neighbor_id long, codes array<int>")
-
-
 def pq_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -1669,7 +1367,6 @@ def pq_topk(
     vec_col: str = "embedding",
     refine_iterations: int = 2,
     rerank_factor: int = 0,
-    arrow: bool = False,
     index: tuple[DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
     """PQ-ADC top-k: score = sum over subspaces of dot(query subvector,
@@ -1691,16 +1388,16 @@ def pq_topk(
     quantization error stops costing recall without giving up the
     narrow-scan candidate stage.
 
-    ``arrow=True`` is the third-decade path (suite-gated on corpus size,
-    same as rp_bucket_topk): encode assignment proposes candidate codes
-    with an Arrow numpy pass instead of scoring rows x k_codes
-    interpreted euclideans, and the ADC rank stage pre-selects per-query
-    candidates per Arrow batch before the row_number window — without it
+    Once the corpus plan estimate reaches ``_ARROW_MIN_BYTES`` the ADC
+    rank stage takes the Arrow tier (:func:`_select_topk`): without it
     the window sorts the FULL corpus-scaled scored relation with |Q|-way
-    parallelism (at sf100: 5M rows through 5 tasks). Both splits keep
-    the exact expressions as the decider, so emitted values are
-    identical (pin-tested).
+    parallelism (at sf100: 5M rows through 5 tasks). Each batch's ADC
+    scores are summed by a SEQUENTIAL j-loop of lookup-adds, the fold's
+    own op order, and the fold expression re-scores the survivors, so
+    emitted values are identical (pin-tested).
     """
+    import numpy as np
+
     if index is not None:
         # prebuilt (codes, codebooks) — the build-once/search-many split;
         # caller owns parameter consistency (m/k_codes must match)
@@ -1708,7 +1405,6 @@ def pq_topk(
     else:
         codes, codebooks = pq_train_encode(
             corpus, m, k_codes, id_col, vec_col, refine_iterations,
-            arrow_assign=arrow,
         )
     qsub = _pq_subvectors(queries, m, id_col, vec_col)
     # (query, j, code) -> dot(q_j, centroid); flattened to qtab[j*k + code]
@@ -1739,39 +1435,47 @@ def pq_topk(
         ),
     )
     keep_n = k * max(rerank_factor, 1)
-    pre = None
-    if arrow:
-        pre = _pq_adc_candidates(codes, qtab, id_col, m, k_codes, keep_n)
-    if pre is not None:
-        # exact fold re-scores the per-batch-selected candidates — the
-        # same expression on the same (codes, qtab) operands as the full
-        # plan, so scores and the downstream ranking are identical
-        scored = (
-            pre.join(F.broadcast(qtab), "query_id")
-            .filter(F.col("query_id") != F.col("neighbor_id"))
-            .select("query_id", "neighbor_id", adc_score.alias("score"))
+    top = None
+    if _plan_bytes(corpus) >= _ARROW_MIN_BYTES:
+
+        def prep(rows):
+            # flat (|Q|, m*k_codes) table; holes (codes emptied by Lloyd
+            # rounds) stay NaN and are never indexed — every corpus code
+            # exists in qtab
+            qt = np.full((len(rows), m * k_codes), np.nan, dtype="float64")
+            for qi, r in enumerate(rows):
+                for slot, tv in r["qtab"].items():
+                    qt[qi, slot] = tv
+            return qt
+
+        def score(pdf, aid, qids, qt):
+            import pandas as pd
+
+            cd = np.vstack([np.asarray(c, dtype="int64") for c in pdf["codes"]])
+            slots = cd + np.arange(m, dtype="int64")[None, :] * k_codes
+            s = np.zeros((len(cd), len(qids)), dtype="float64")
+            for j in range(m):  # sequential accumulation over j, as the fold
+                s = s + qt[:, slots[:, j]].T
+            pay = pd.DataFrame({"codes": pdf["codes"].to_numpy()})
+            return s, aid[:, None] != qids[None, :], None, pay
+
+        stream = codes.select(F.col(id_col).alias("id"), "codes")
+        top = _select_topk(
+            stream, qtab, keep_n, prep, score, "codes array<int>", adc_score
         )
-    else:
-        scored = (
+    if top is None:
+        top = _topk(
             codes.crossJoin(F.broadcast(qtab))
             .filter(F.col("query_id") != F.col(id_col))
             .select(
                 "query_id",
                 F.col(id_col).alias("neighbor_id"),
                 adc_score.alias("score"),
-            )
+            ),
+            keep_n,
         )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
     if rerank_factor <= 0:
-        return (
-            scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-            .filter(F.col("rank") <= k)
-        )
-    cand = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k * rerank_factor)
-        .select("query_id", "neighbor_id")
-    )
+        return top
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), V.as_double(F.col(vec_col)).alias("cv")
     )
@@ -1779,7 +1483,8 @@ def pq_topk(
         F.col(id_col).alias("query_id"), V.as_double(F.col(vec_col)).alias("qv")
     )
     exact = (
-        cand.join(c, "neighbor_id")
+        top.select("query_id", "neighbor_id")
+        .join(c, "neighbor_id")
         .join(F.broadcast(q), "query_id")
         .select(
             "query_id",
@@ -1787,7 +1492,4 @@ def pq_topk(
             V.cosine(F.col("qv"), F.col("cv")).alias("score"),
         )
     )
-    return (
-        exact.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-    )
+    return _topk(exact, k)

@@ -28,14 +28,6 @@ from .base import Query as _q
 N_QUERY_VECS = 5
 TOP_K = 10
 
-#: Corpus rows above which ANN queries switch to Arrow-batched kernels
-#: where one exists (key computation / candidate selection). Both paths
-#: emit identical values by construction; below the line the expression
-#: plans (verified at every sf through sf10) avoid the Arrow pass's fixed
-#: setup cost. sf0.1 = 50k and sf10 = 500k stay on expressions; sf100 =
-#: 5M crosses.
-ARROW_KEYS_MIN_ROWS = 1_000_000
-
 
 def _emb(spark, sf_dir):
     return load_table(spark, sf_dir, "embeddings")
@@ -99,12 +91,7 @@ def ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-10 neighbors for the first 5 vectors (by id)."""
     emb = _emb(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") < N_QUERY_VECS)
-    return similarity.brute_force_topk(
-        emb, queries, k=TOP_K, dim=EMB_DIM,
-        # expression plan below the line (Arrow's fixed cost loses at
-        # bench scale: r7 bench +29% was this, directive 6), Arrow above
-        arrow=_emb_count(spark, sf_dir) >= ARROW_KEYS_MIN_ROWS,
-    )
+    return similarity.brute_force_topk(emb, queries, k=TOP_K, dim=EMB_DIM)
 
 
 _Q = V.dd_vec("q.embedding")
@@ -246,20 +233,12 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bucketed random-projection LSH top-10, portable-determinism mode:
     md5-derived Rademacher planes + fold-expression projections make the
     bucket keys (and so the candidate set) engine-replayable — fully
-    hash-verified against the generated DuckDB twin. The spark.ml
-    BucketedRandomProjectionLSH variant (JVM-RNG planes, not replayable)
-    stays on the operator with pytest recall coverage."""
+    hash-verified against the generated DuckDB twin."""
     emb = _emb(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") < N_QUERY_VECS)
     return similarity.rp_bucket_topk(
         emb, queries, k=TOP_K, dim=EMB_DIM, n_tables=LSH_TABLES,
         bucket_length=LSH_BUCKET_LEN,
-        # keys are bit-identical on both paths (sequential-accumulation
-        # numpy, pin-tested), so this gate is pure economics: the Arrow
-        # pass has a fixed per-query cost that loses at bench scale and
-        # wins ~dim*n_tables interpreted evals per row at the third
-        # decade; <=sf10 keeps the long-verified expression plan
-        arrow_keys=_emb_count(spark, sf_dir) >= ARROW_KEYS_MIN_ROWS,
     )
 
 
@@ -591,7 +570,6 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the m-byte code column."""
     emb = _emb(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") < N_QUERY_VECS)
-    arrow = _emb_count(spark, sf_dir) >= ARROW_KEYS_MIN_ROWS
     # Build-once/search-many: the trained+encoded corpus is a pure
     # function of (corpus, m, k_codes, md5 seed policy); staging it in
     # the bounded index cache skips the train/encode jobs on repeat
@@ -600,19 +578,14 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # at sf100 under block-manager pressure; the staged index pays once).
     index = _MODEL_CACHE.get_or_build(
         spark,
-        (sf_dir, "pq", PQ_M, PQ_CODES, arrow),
+        (sf_dir, "pq", PQ_M, PQ_CODES),
         lambda: similarity.pq_train_encode(
-            emb, PQ_M, PQ_CODES, refine_iterations=0,
-            arrow_assign=arrow, materialize=True,
+            emb, PQ_M, PQ_CODES, refine_iterations=0, materialize=True,
         ),
     )
     return similarity.pq_topk(
         emb, queries, k=TOP_K, m=PQ_M, k_codes=PQ_CODES,
-        refine_iterations=0, rerank_factor=PQ_RERANK,
-        # Arrow ADC candidate selection above the line (values identical
-        # by construction; see rp_bucket_topk note)
-        arrow=arrow,
-        index=index,
+        refine_iterations=0, rerank_factor=PQ_RERANK, index=index,
     )
 
 

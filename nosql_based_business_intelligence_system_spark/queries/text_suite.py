@@ -25,8 +25,8 @@ def _docs(spark, sf_dir):
 
 
 #: Corpus rows above which text queries switch on third-decade join/plan
-#: levers (mirrors similarity_suite.ARROW_KEYS_MIN_ROWS — sf10's 500k
-#: docs keep the verified small-scale plans, sf100's 5M cross).
+#: levers (tools/make_sf.py: sf10's 500k docs keep the verified
+#: small-scale plans, sf100's 5M cross).
 TEXT_SCALE_MIN_DOCS = 1_000_000
 
 _DOCS_COUNT_CACHE = SessionCache("docs-count", capacity=8, holds_storage=False)

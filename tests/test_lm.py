@@ -48,3 +48,25 @@ def test_short_docs_carry_null_scores(spark):
 def test_common_bigrams_score_lower_than_rare(spark):
     out = _scores(spark)
     assert out[1].cross_entropy < out[3].cross_entropy
+
+
+def test_ckpt_actual_bytes_reads_this_rdds_blocks(spark):
+    """The per-RDD block read gives the same bytes as walking every RDD's
+    storage info, with other checkpoints live, and None for a frame that
+    is not a checkpoint."""
+    others = [
+        spark.range(1000 * i).localCheckpoint(eager=True) for i in (1, 2, 3)
+    ]
+    ckpt = spark.range(20_000).selectExpr("id", "id * 2 AS x").localCheckpoint(
+        eager=True
+    )
+    rid = ckpt._jdf.queryExecution().analyzed().rdd().id()
+    walk = [
+        int(info.memSize()) + int(info.diskSize())
+        for info in spark.sparkContext._jsc.sc().getRDDStorageInfo()
+        if info.id() == rid
+    ]
+    assert walk and walk[0] > 0
+    assert lm.ckpt_actual_bytes(ckpt) == walk[0]
+    assert lm.ckpt_actual_bytes(spark.range(10)) is None
+    assert all(lm.ckpt_actual_bytes(o) is not None for o in others)

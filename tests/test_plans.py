@@ -156,9 +156,10 @@ def test_doc_chunks_map_only(spark):
 
 
 def test_new_similarity_ops_stay_jvm_side(spark):
-    """SemDeDup + PQ plans: no row-at-a-time Python eval anywhere (the
-    only sanctioned Python boundary in the repo is Arrow-batched, and
-    these ops don't use even that)."""
+    """SemDeDup + PQ plans: no row-at-a-time Python eval anywhere. The
+    only sanctioned Python boundary in the repo is Arrow-batched:
+    SemDeDup pairs each cell in one applyInPandas pass, and PQ below the
+    Arrow size threshold uses none."""
     for q in ("semantic_dedup_survivors", "ann_pq_topk"):
         plan = I.explain_str(_df(spark, q), "simple")
         assert "BatchEvalPython" not in plan, q

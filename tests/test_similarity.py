@@ -3,6 +3,7 @@ the approximate (LSH / IVF) paths against brute-force ground truth."""
 
 from __future__ import annotations
 
+import contextlib
 import math
 
 import pytest
@@ -22,6 +23,19 @@ VECS = [
 
 def _df(spark):
     return spark.createDataFrame(VECS)
+
+
+@contextlib.contextmanager
+def _tier(monkeypatch, arrow: bool):
+    """Force the operators' tier: the Arrow tier through a zero corpus
+    size threshold, the expression tier through a query budget that no
+    query side fits (-1 declines even an empty one)."""
+    with monkeypatch.context() as m:
+        if arrow:
+            m.setattr(similarity, "_ARROW_MIN_BYTES", 0)
+        else:
+            m.setattr(similarity, "BF_TOPK_MAX_QUERIES", -1)
+        yield
 
 
 def test_brute_force_ordering_and_scores(spark):
@@ -47,16 +61,6 @@ def _recall(approx, exact):
     e = {(r.query_id, r.neighbor_id) for r in exact}
     a = {(r.query_id, r.neighbor_id) for r in approx}
     return len(a & e) / len(e)
-
-
-def test_lsh_recall_on_fixture(spark, sf_smoke):
-    emb = load_table(spark, sf_smoke, "embeddings")
-    queries = emb.filter("vec_id < 5")
-    exact = similarity.brute_force_topk(emb, queries, k=10).collect()
-    approx = similarity.lsh_topk(
-        emb, queries, k=10, num_hash_tables=8, bucket_length=4.0
-    ).collect()
-    assert _recall(approx, exact) >= 0.5, "LSH recall collapsed"
 
 
 def test_rp_bucket_recall_on_fixture(spark, sf_smoke):
@@ -91,17 +95,19 @@ def test_rp_bucket_scores_are_exact(spark, sf_smoke):
         assert exact[(r.query_id, r.neighbor_id)] == r.score
 
 
-def test_rp_bucket_raises_on_wrong_dim(spark):
+def test_rp_bucket_raises_on_wrong_dim(spark, monkeypatch):
     df = spark.createDataFrame([Row(vec_id=0, embedding=[1.0, 0.0])])
-    with pytest.raises(Exception, match="expected dim"):
+    with pytest.raises(Exception, match="expected dim"), _tier(
+        monkeypatch, arrow=False
+    ):
         similarity.rp_bucket_topk(df, df, k=1, dim=64).collect()
     with pytest.raises(Exception, match="expected dim"):
         similarity.rp_bucket_topk(
-            df, df, k=1, dim=64, arrow_keys=True
+            df, df, k=1, dim=64
         ).collect()
 
 
-def test_rp_bucket_arrow_keys_bit_identical(spark, sf_smoke):
+def test_rp_bucket_arrow_keys_bit_identical(spark, sf_smoke, monkeypatch):
     """The Arrow key path (sequential-accumulation numpy) must produce
     BIT-IDENTICAL bucket keys to the fold expression — same IEEE ops in
     the same left-to-right order, not epsilon-close (a flipped key on a
@@ -111,12 +117,12 @@ def test_rp_bucket_arrow_keys_bit_identical(spark, sf_smoke):
     emb = load_table(spark, sf_smoke, "embeddings")
     queries = emb.filter("vec_id < 5")
 
-    expr = similarity.rp_bucket_topk(
-        emb, queries, k=10, dim=64, n_tables=8, bucket_length=4.0
-    ).collect()
+    with _tier(monkeypatch, arrow=False):
+        expr = similarity.rp_bucket_topk(
+            emb, queries, k=10, dim=64, n_tables=8, bucket_length=4.0
+        ).collect()
     arrow = similarity.rp_bucket_topk(
         emb, queries, k=10, dim=64, n_tables=8, bucket_length=4.0,
-        arrow_keys=True,
     ).collect()
     key = lambda r: (r.query_id, r.rank)  # noqa: E731
     e = {key(r): (r.neighbor_id, r.score) for r in expr}
@@ -134,21 +140,22 @@ def test_rp_bucket_arrow_keys_bit_identical(spark, sf_smoke):
         Row(vec_id=200 + i, embedding=[1.0] * 64) for i in range(4)
     ]
     df = spark.createDataFrame(rows)
-    e2 = similarity.rp_bucket_topk(
-        df, df.filter("vec_id < 102"), k=3, dim=64, n_tables=8,
-        bucket_length=4.0,
-    ).collect()
+    with _tier(monkeypatch, arrow=False):
+        e2 = similarity.rp_bucket_topk(
+            df, df.filter("vec_id < 102"), k=3, dim=64, n_tables=8,
+            bucket_length=4.0,
+        ).collect()
     a2 = similarity.rp_bucket_topk(
         df, df.filter("vec_id < 102"), k=3, dim=64, n_tables=8,
-        bucket_length=4.0, arrow_keys=True,
+        bucket_length=4.0,
     ).collect()
     e2m = {key(r): (r.neighbor_id, r.score) for r in e2}
     a2m = {key(r): (r.neighbor_id, r.score) for r in a2}
     assert e2m == a2m and e2m
 
 
-def test_rp_bucket_arrow_keys_falls_back_on_non_integral_ids(spark):
-    """String ids can't ride the Arrow int64 contract; arrow_keys=True
+def test_rp_bucket_arrow_keys_falls_back_on_non_integral_ids(spark, monkeypatch):
+    """String ids can't ride the Arrow int64 contract; the Arrow tier
     must DECLINE to the expression plan (same stance as the query-budget
     overflow path, ADVICE r8), not hard-fail."""
     rows = [
@@ -157,11 +164,12 @@ def test_rp_bucket_arrow_keys_falls_back_on_non_integral_ids(spark):
         for i in range(6)
     ]
     df = spark.createDataFrame(rows)
-    expr = similarity.rp_bucket_topk(
-        df, df, k=3, dim=64, bucket_length=4.0
-    ).collect()
+    with _tier(monkeypatch, arrow=False):
+        expr = similarity.rp_bucket_topk(
+            df, df, k=3, dim=64, bucket_length=4.0
+        ).collect()
     arrow = similarity.rp_bucket_topk(
-        df, df, k=3, dim=64, bucket_length=4.0, arrow_keys=True
+        df, df, k=3, dim=64, bucket_length=4.0
     ).collect()
     key = lambda r: (r.query_id, r.rank)  # noqa: E731
     assert {key(r): (r.neighbor_id, r.score) for r in arrow} == {
@@ -169,7 +177,7 @@ def test_rp_bucket_arrow_keys_falls_back_on_non_integral_ids(spark):
     }
 
 
-def test_brute_force_arrow_nan_component_parity(spark):
+def test_brute_force_arrow_nan_component_parity(spark, monkeypatch):
     """A non-NULL corpus vector CONTAINING a NaN component scores NaN on
     the expression path, and Spark orders NaN larger than any value — so
     `desc` ranks it FIRST. The Arrow selection must force-keep such rows
@@ -182,10 +190,12 @@ def test_brute_force_arrow_nan_component_parity(spark):
     ] + [Row(vec_id=99, embedding=[float("nan")] + [1.0] * 7)]
     df = spark.createDataFrame(rows)
     q = df.filter("vec_id = 0")
-    expr = similarity.brute_force_topk(df, q, k=3, dim=8, arrow=False)
-    arrow = similarity.brute_force_topk(df, q, k=3, dim=8, arrow=True)
-    e = sorted(expr.collect(), key=lambda r: r.rank)
-    a = sorted(arrow.collect(), key=lambda r: r.rank)
+    with _tier(monkeypatch, arrow=False):
+        expr = similarity.brute_force_topk(df, q, k=3, dim=8)
+        e = sorted(expr.collect(), key=lambda r: r.rank)
+    with _tier(monkeypatch, arrow=True):
+        arrow = similarity.brute_force_topk(df, q, k=3, dim=8)
+        a = sorted(arrow.collect(), key=lambda r: r.rank)
     assert [r.neighbor_id for r in e] == [r.neighbor_id for r in a]
     # NaN score sorts first under desc on BOTH plans
     assert e[0].neighbor_id == 99 and math.isnan(e[0].score)
@@ -285,7 +295,7 @@ def test_cosine_pairs_input_cap_raises(spark):
     assert cosine_pairs(df, threshold=0.99, max_rows=100).count() > 0
 
 
-def test_pq_arrow_path_bit_identical(spark, sf_smoke):
+def test_pq_arrow_path_bit_identical(spark, sf_smoke, monkeypatch):
     """The r8 Arrow splits (encode candidate proposal + ADC per-batch
     selection) and the two-stage bottom-k codebook seeding must leave
     every emitted value identical to the expression plan — the exact
@@ -293,8 +303,10 @@ def test_pq_arrow_path_bit_identical(spark, sf_smoke):
     emb = load_table(spark, sf_smoke, "embeddings")
     queries = emb.filter("vec_id < 5")
     kw = dict(k=10, m=4, k_codes=32, refine_iterations=0, rerank_factor=8)
-    expr = similarity.pq_topk(emb, queries, **kw).collect()
-    arrow = similarity.pq_topk(emb, queries, arrow=True, **kw).collect()
+    with _tier(monkeypatch, arrow=False):
+        expr = similarity.pq_topk(emb, queries, **kw).collect()
+    with _tier(monkeypatch, arrow=True):
+        arrow = similarity.pq_topk(emb, queries, **kw).collect()
     key = lambda r: (r.query_id, r.rank)  # noqa: E731
     e = {key(r): (r.neighbor_id, r.score) for r in expr}
     a = {key(r): (r.neighbor_id, r.score) for r in arrow}
@@ -309,17 +321,30 @@ def test_pq_arrow_path_bit_identical(spark, sf_smoke):
     # keeps recall coverage (test_pq_recall_on_fixture); assert here only
     # that the arrow trainer runs and ranks validly.
     kw2 = dict(k=5, m=4, k_codes=8, refine_iterations=1, rerank_factor=0)
-    a2 = similarity.pq_topk(emb, queries, arrow=True, **kw2).collect()
+    with _tier(monkeypatch, arrow=True):
+        a2 = similarity.pq_topk(emb, queries, **kw2).collect()
     assert len(a2) == 5 * 5
     assert all(1 <= r.rank <= 5 for r in a2)
 
 
-def test_pq_arrow_rejects_non_integral_ids(spark):
+def test_pq_non_integral_ids_match_across_tiers(spark, monkeypatch):
+    """String ids: the Arrow encode proposal passes any id type through,
+    and the ADC selector declines to the expression plan (ids ride Arrow
+    as int64), so both tiers emit the same rows."""
     df = spark.createDataFrame(
-        [Row(vec_id="x", embedding=[1.0, 0.0, 0.0, 0.0])]
+        [
+            Row(vec_id=f"x{i}", embedding=[float((i * 5 + j) % 7 - 3)
+                                           for j in range(8)])
+            for i in range(12)
+        ]
     )
-    with pytest.raises(TypeError, match="integral id"):
-        similarity.pq_train_encode(df, m=4, k_codes=2, arrow_assign=True)
+    q = df.filter("vec_id < 'x3'")
+    kw = dict(k=3, m=4, k_codes=4, refine_iterations=1, rerank_factor=2)
+    with _tier(monkeypatch, arrow=False):
+        expr = sorted(similarity.pq_topk(df, q, **kw).collect())
+    with _tier(monkeypatch, arrow=True):
+        arrow = sorted(similarity.pq_topk(df, q, **kw).collect())
+    assert expr == arrow and expr
 
 
 # --- SemDeDup ----------------------------------------------------------------
@@ -417,7 +442,7 @@ def test_pq_raises_on_indivisible_dim(spark):
         similarity.pq_train_encode(df, m=2, k_codes=2)[0].collect()
 
 
-def test_nearest_cell_arrow_matches_crossjoin(spark, sf_correctness):
+def test_nearest_cell_arrow_matches_crossjoin(spark, sf_correctness, monkeypatch):
     """The large-K Arrow assignment path (numpy proposes candidate cells,
     exact expression + min_by disposes) must assign every vector to the
     SAME cell as the crossJoin plan — the sf100 hazard fix
@@ -430,19 +455,16 @@ def test_nearest_cell_arrow_matches_crossjoin(spark, sf_correctness):
     emb = load_table(spark, sf_correctness, "embeddings")
     c = emb.select(F.col("vec_id"), V.as_double(F.col("embedding")).alias("v"))
     _, cents = similarity.ivf_assign(emb, 100, refine_iterations=0)
-    arrow = similarity._nearest_cell_arrow(c, cents, "vec_id", 64).select(
+    monkeypatch.setattr(similarity, "_NEAREST_CELL_ARROW_K", 0)
+    arrow = similarity._nearest_cell(c, cents, "vec_id", 64).select(
         "vec_id", "cell"
     )
-    old_k = similarity._NEAREST_CELL_ARROW_K
-    similarity._NEAREST_CELL_ARROW_K = 10**9  # force the crossJoin plan
-    try:
-        cross = similarity._nearest_cell(c, cents, "vec_id", 64).select(
-            "vec_id", "cell"
-        )
-        assert arrow.exceptAll(cross).count() == 0
-        assert cross.exceptAll(arrow).count() == 0
-    finally:
-        similarity._NEAREST_CELL_ARROW_K = old_k
+    monkeypatch.setattr(similarity, "_NEAREST_CELL_ARROW_K", 10**9)
+    cross = similarity._nearest_cell(c, cents, "vec_id", 64).select(
+        "vec_id", "cell"
+    )
+    assert arrow.exceptAll(cross).count() == 0
+    assert cross.exceptAll(arrow).count() == 0
 
 
 def test_pair_disk_guard_fires_in_sign_lsh(spark):
@@ -494,3 +516,74 @@ def test_sign_lsh_band_key_cap_bounds_bucket(spark):
         max_ids_per_band_key=200,
     )
     assert uncut.count() == 80 * 79 // 2
+
+
+# --- edge inputs, both tiers ---------------------------------------------------
+
+
+TOPK_OPS = {
+    "brute_force": lambda c, q: similarity.brute_force_topk(c, q, k=3, dim=8),
+    "rp_lsh": lambda c, q: similarity.rp_bucket_topk(
+        c, q, k=3, dim=8, n_tables=4, bucket_length=4.0
+    ),
+    "pq": lambda c, q: similarity.pq_topk(
+        c, q, k=3, m=4, k_codes=4, refine_iterations=0, rerank_factor=2
+    ),
+}
+
+
+def _edge_inputs(spark, case):
+    df = spark.createDataFrame(
+        [
+            Row(vec_id=i, embedding=[float((i * 3 + j) % 7 - 3)
+                                     for j in range(8)])
+            for i in range(30)
+        ]
+    )
+    queries = df.filter("vec_id < 4")
+    if case == "empty_queries":
+        return df, df.filter("vec_id < 0")
+    if case == "empty_corpus":
+        return df.filter("vec_id < 0"), queries
+    if case == "null_vectors":
+        nulls = spark.createDataFrame(
+            [(100 + i, None) for i in range(10)],
+            "vec_id bigint, embedding array<double>",
+        )
+        return nulls, queries
+    return df, queries  # over_budget
+
+
+@pytest.mark.parametrize(
+    "op,case",
+    [
+        (op, case)
+        for op in TOPK_OPS
+        for case in ("empty_queries", "empty_corpus", "over_budget")
+    ]
+    + [("brute_force", "null_vectors")],
+)
+def test_topk_edge_inputs_match_across_tiers(spark, monkeypatch, op, case):
+    """Empty query side, empty corpus, a query side past the Arrow
+    budget (the selector declines) and, for brute force, an all-NULL
+    corpus: the expression and Arrow tiers return identical rows."""
+    corpus, queries = _edge_inputs(spark, case)
+
+    def run():
+        out = TOPK_OPS[op](corpus, queries)
+        rows = sorted(out.collect(), key=lambda r: (r.query_id, r.rank))
+        return out.columns, [tuple(r) for r in rows]
+
+    with _tier(monkeypatch, arrow=False):
+        expr = run()
+    with _tier(monkeypatch, arrow=True):
+        if case == "over_budget":
+            monkeypatch.setattr(similarity, "BF_TOPK_MAX_QUERIES", 1)
+        arrow = run()
+    assert expr == arrow
+    if case.startswith("empty"):
+        assert expr[1] == []
+    else:
+        assert len(expr[1]) == 4 * 3
+    if case == "null_vectors":
+        assert all(r[2] is None for r in expr[1])

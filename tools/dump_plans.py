@@ -92,8 +92,9 @@ FLAGSHIPS = {
         "back; no self-join, no O(n^2)"
     ),
     "semantic_dedup_survivors": (
-        "SemDeDup: broadcast-centroid min_by assignment, cell-keyed "
-        "self-join (checkpointed), anti-join keep — never corpus^2"
+        "SemDeDup: broadcast-centroid min_by assignment, one "
+        "applyInPandas pass pairs each cell, anti-join keep — never "
+        "corpus^2"
     ),
     "ann_pq_topk": (
         "PQ-ADC: codebook lineage checkpointed; scoring is map lookups "
