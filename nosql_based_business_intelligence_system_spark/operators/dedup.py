@@ -15,6 +15,13 @@ pair* count, never O(n^2) over the corpus. Exact dedup shuffles once on the
 hash; Jaccard/MinHash shuffle on shingle/band keys (skew from ultra-common
 shingles is the known hazard — mitigate by dropping top-frequency shingles,
 `max_docs_per_shingle`).
+
+Every pair generator guards itself: once its input's plan size estimate
+(``partitioning.plan_bytes``; no job) reaches ``PAIR_GUARD_MIN_BYTES`` —
+for a two-corpus form, the larger side's — it prices its candidate-pair
+volume against the scratch disk before the pair stage launches and fails
+fast naming the lever that caps it (:class:`PairExplosionError`). No
+caller flag or row count decides this.
 """
 
 from __future__ import annotations
@@ -25,7 +32,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import text as T
-from .partitioning import spread
+from .partitioning import plan_bytes, spread
 
 
 class PairExplosionError(RuntimeError):
@@ -48,8 +55,24 @@ class PairExplosionError(RuntimeError):
 #: box, the sf100 blast must FAIL.
 PAIR_ROW_WIDTH = 16
 
+#: Input plan estimate from which a pair generator runs its disk guard.
+#: Registry inputs read (bytes; tools/make_sf.py for sf1): documents
+#: 65,049 / 594,568 / 5,857,871, part 26,366 / 179,850 / 1,522,869,
+#: embeddings 193,638 / 798,695 / 5,241,929 at sf0.01 / sf0.1 / sf1. So
+#: every guard is off through sf0.1 and on from sf1: the guard's extra
+#: job is measurable at fixture scale (sf0.01, off -> on CPU s:
+#: dedup_ngram_jaccard 0.87 -> 1.58, part_name_near_pairs 1.48 -> 2.40)
+#: and noise at scale, where the r8 ENOSPC blast happened (sf10).
+PAIR_GUARD_MIN_BYTES = 1 << 20
 
-def _pair_disk_budget(spark) -> int:
+
+def _guarded(*inputs: DataFrame) -> bool:
+    """Whether a pair generator over ``inputs`` runs its disk guard: the
+    largest input's plan estimate reaches ``PAIR_GUARD_MIN_BYTES``."""
+    return max(plan_bytes(df) for df in inputs) >= PAIR_GUARD_MIN_BYTES
+
+
+def _scratch_budget(spark) -> int:
     """Scratch-disk byte budget for one candidate-pair stage: the env
     override ``SPARK_GRAFT_PAIR_DISK_BUDGET`` (bytes), else the free space
     on the Spark local (shuffle/spill) directory."""
@@ -69,13 +92,7 @@ def _pair_disk_budget(spark) -> int:
     return shutil.disk_usage(local or tempfile.gettempdir()).free
 
 
-def pair_disk_guard(
-    keyed: DataFrame,
-    key_cols: list[str],
-    lever: str,
-    budget_bytes: int | None = None,
-    row_width: int = PAIR_ROW_WIDTH,
-) -> int:
+def pair_guard(keyed: DataFrame, key_cols: list[str], lever: str) -> int:
     """Estimate the candidate-pair volume a bucketed self-join would emit
     and fail fast when it exceeds the scratch-disk budget.
 
@@ -86,7 +103,8 @@ def pair_disk_guard(
     bucket) dies with a clear error naming the cap ``lever`` instead of
     filling the disk mid-job. Returns the byte estimate. Runs as its own
     job; call on a persisted/checkpointed frame so the keyed lineage isn't
-    recomputed for the guard.
+    recomputed for the guard. The operators call it only when
+    :func:`_guarded`; called directly, it always prices.
     """
     d = F.col("d")
     return _price_pairs(
@@ -94,37 +112,25 @@ def pair_disk_guard(
         d * (d - 1) / 2,
         d,
         lever,
-        budget_bytes,
-        row_width,
     )
 
 
-def _price_pairs(
-    sizes: DataFrame,
-    pairs,
-    biggest,
-    lever: str,
-    budget_bytes: int | None = None,
-    row_width: int = PAIR_ROW_WIDTH,
-) -> int:
+def _price_pairs(sizes: DataFrame, pairs, biggest, lever: str) -> int:
     """Sum the per-bucket ``pairs`` column over ``sizes`` (one row per
     bucket that will pair) in one 1-row job and raise
     :class:`PairExplosionError` when the pair rows would outgrow the
-    scratch-disk budget. Returns the byte estimate."""
+    scratch-disk budget (:func:`_scratch_budget`). Returns the byte
+    estimate."""
     row = sizes.agg(
         F.coalesce(F.sum(pairs), F.lit(0)).alias("pairs"),
         F.coalesce(F.max(biggest), F.lit(0)).alias("biggest"),
     ).first()
-    est = int(row["pairs"] * row_width)
-    budget = (
-        budget_bytes
-        if budget_bytes is not None
-        else _pair_disk_budget(sizes.sparkSession)
-    )
+    est = int(row["pairs"] * PAIR_ROW_WIDTH)
+    budget = _scratch_budget(sizes.sparkSession)
     if est > budget:
         raise PairExplosionError(
             f"candidate-pair stage would emit ~{int(row['pairs']):,} pairs "
-            f"(~{est / 1e9:.1f} GB at {row_width} B/row) against a "
+            f"(~{est / 1e9:.1f} GB at {PAIR_ROW_WIDTH} B/row) against a "
             f"{budget / 1e9:.1f} GB scratch-disk budget; largest bucket = "
             f"{int(row['biggest']):,} docs. Cap bucket size with "
             f"`{lever}` (a bucket of B docs is B*(B-1)/2 pairs; a bucket "
@@ -222,8 +228,6 @@ def shingle_doc_pairs(
     id_col: str = "doc_id",
     n: int = 3,
     max_docs_per_shingle: int | None = None,
-    disk_guard: bool = False,
-    pair_disk_budget: int | None = None,
 ) -> DataFrame:
     """(doc_a, doc_b, jaccard) for every pair sharing >=1 n-word shingle.
 
@@ -236,10 +240,10 @@ def shingle_doc_pairs(
     materialize-before-self-join pattern, ~24 bytes/shingle cached.
     ``max_docs_per_shingle`` drops degenerate ultra-common shingles before
     the join — the standard skew guard for this operator at scale.
-    ``disk_guard`` prices the pair volume against the scratch-disk budget
-    before the self-join launches (:func:`pair_disk_guard`) — one extra
-    narrow aggregate over the persisted shingle rows, so engage it at
-    scale, not on sub-second fixtures.
+    Past ``PAIR_GUARD_MIN_BYTES`` of input the pair volume is priced
+    against the scratch-disk budget before the self-join launches
+    (:func:`pair_guard`, one extra narrow aggregate over the persisted
+    shingle rows).
     """
     from pyspark.storagelevel import StorageLevel
 
@@ -251,10 +255,8 @@ def shingle_doc_pairs(
             .drop("df_")
         )
     sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
-    if disk_guard:
-        pair_disk_guard(
-            sh, ["shingle"], "max_docs_per_shingle", pair_disk_budget
-        )
+    if _guarded(df):
+        pair_guard(sh, ["shingle"], "max_docs_per_shingle")
     a = _sh(sh.alias("a"))
     b = _sh(sh.alias("b"))
     return (
@@ -284,21 +286,16 @@ def ngram_jaccard_dupes(
     n: int = 3,
     threshold: float = 0.5,
     max_docs_per_shingle: int | None = None,
-    disk_guard: bool = False,
-    pair_disk_budget: int | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs at/above a Jaccard threshold, deterministic
     order. ``max_docs_per_shingle`` engages shingle_doc_pairs' skew
     guard — REQUIRED at scale: one boilerplate shingle shared by d docs
     alone generates d^2/2 candidate pairs (a 10k-doc shingle is 50M
     pairs; measured 63 GB of partial-aggregate spill at sf10 without
-    the guard). ``disk_guard``/``pair_disk_budget`` fail fast on a
-    pair-volume blast (see :func:`pair_disk_guard`)."""
+    the guard). A pair-volume blast fails fast at scale (see
+    :func:`shingle_doc_pairs`)."""
     return (
-        shingle_doc_pairs(
-            df, content_col, id_col, n, max_docs_per_shingle,
-            disk_guard=disk_guard, pair_disk_budget=pair_disk_budget,
-        )
+        shingle_doc_pairs(df, content_col, id_col, n, max_docs_per_shingle)
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")
     )
@@ -321,9 +318,31 @@ def cross_corpus_dupes(
     only (the seen side's self-pairs never materialize). At 100 TB the
     seen side's shingle table is the thing you keep materialized between
     crawl batches.
+
+    Each shingle shared by d_new new and d_seen seen docs emits
+    d_new * d_seen join rows, the r8 ENOSPC blast class; past
+    ``PAIR_GUARD_MIN_BYTES`` of the larger input, that sum is priced
+    before the join. The operator has no bucket cap, so the lever it
+    names is the capped MinHash form.
     """
     new_sh = shingle_rows(new_docs, content_col, id_col, n)
     seen_sh = shingle_rows(seen_docs, content_col, id_col, n)
+    if _guarded(new_docs, seen_docs):
+        # both sides feed the price and the join: the price job
+        # materializes each side's checkpoint, the join re-reads it
+        new_sh = new_sh.localCheckpoint(eager=False)
+        seen_sh = seen_sh.localCheckpoint(eager=False)
+
+        def sizes(sh, d):
+            return sh.groupBy("shingle").agg(F.count(F.lit(1)).alias(d))
+
+        d, d_b = F.col("d"), F.col("d_b")
+        _price_pairs(
+            sizes(new_sh, "d").join(_sh(sizes(seen_sh, "d_b")), "shingle"),
+            d * d_b,
+            F.greatest(d, d_b),
+            "minhash_cross_corpus_dupes(max_docs_per_band_key=...)",
+        )
     a = _sh(new_sh.alias("a"))
     b = _sh(seen_sh.alias("b"))
     return (
@@ -480,8 +499,7 @@ def _lsh_candidate_pairs(
     rows: DataFrame,
     max_bucket: int | None,
     lever: str,
-    disk_guard: bool,
-    budget_bytes: int | None,
+    guard: bool,
     cross: bool = False,
 ) -> DataFrame:
     """(doc_a, doc_b) candidate pairs from LSH bucket rows — the one pair
@@ -494,7 +512,8 @@ def _lsh_candidate_pairs(
     docs) or exceed ``max_bucket`` (the documented recall trade, when a
     cap is set) are dropped, and only the kept lists — collision-scaled,
     ~MBs where the banded rows are corpus-scaled GBs — take the lazy
-    checkpoint. The ``disk_guard`` prices d*(d-1)/2 per kept list from
+    checkpoint. With ``guard`` (the caller's :func:`_guarded` reading of
+    its own input) the kept lists are priced at d*(d-1)/2 each from
     the list sizes, so the blast dies with ``lever`` named BEFORE any pair
     row exists; its 1-row job is what materializes the checkpoint. Pairs
     explode in place from each list: every later id of a sorted list,
@@ -550,8 +569,8 @@ def _lsh_candidate_pairs(
         .drop("band", "key")
         .localCheckpoint(eager=False)
     )
-    if disk_guard:
-        _price_pairs(buckets, pairs, biggest, lever, budget_bytes)
+    if guard:
+        _price_pairs(buckets, pairs, biggest, lever)
     return buckets.select(F.explode(F.expr(gen)).alias("p")).select(
         "p.doc_a", "p.doc_b"
     )
@@ -636,8 +655,6 @@ def minhash_lsh_dupes(
     seed: int = 42,
     signatures: DataFrame | None = None,
     max_docs_per_band_key: int | None = None,
-    disk_guard: bool = False,
-    pair_disk_budget: int | None = None,
 ) -> DataFrame:
     """MinHash+LSH fuzzy dedup, native DataFrame ops end to end:
     signature -> band keys (the r-row signature slices) -> candidate
@@ -665,8 +682,9 @@ def minhash_lsh_dupes(
     ``max_docs_per_shingle``: a bucket of B docs is B^2/2 pairs, and a
     multi-thousand-doc bucket at threshold-worthy similarity is
     boilerplate, not duplication. Pairs whose EVERY collision band is
-    capped are lost (recall, not precision). ``disk_guard`` prices the
-    pairs of the buckets that will pair before the explode launches.
+    capped are lost (recall, not precision). Past ``PAIR_GUARD_MIN_BYTES``
+    of ``df`` the pairs of the buckets that will pair are priced before
+    the explode launches.
     Every stage (md5 base hash, universal-hash mins, band keys,
     agreement count) is engine-portable, so the registry entry is FULLY
     oracle-checked against a generated DuckDB twin; self-consistency
@@ -697,8 +715,7 @@ def minhash_lsh_dupes(
         _band_rows(sig, num_hashes, bands),
         max_docs_per_band_key,
         "max_docs_per_band_key",
-        disk_guard,
-        pair_disk_budget,
+        _guarded(df),
     )
     return _est_jaccard_pairs(cand, sig, sig, num_hashes, jaccard_threshold)
 
@@ -714,8 +731,6 @@ def minhash_cross_corpus_dupes(
     jaccard_threshold: float = 0.5,
     seed: int = 42,
     max_docs_per_band_key: int | None = None,
-    disk_guard: bool = False,
-    pair_disk_budget: int | None = None,
 ) -> DataFrame:
     """(new_doc, seen_doc, est_jaccard) MinHash-LSH near-dup pairs BETWEEN
     two corpora — the incremental-crawl shape of :func:`minhash_lsh_dupes`
@@ -739,8 +754,9 @@ def minhash_cross_corpus_dupes(
     ``max_docs_per_band_key`` drops over-cap (band, key) buckets on EACH
     side before pairing — the same recall-for-survival trade as the
     guarded self-join path, mirrored in the DuckDB twin with per-side
-    QUALIFY cuts. ``disk_guard`` prices sum(d_new * d_seen) over matched
-    buckets before the pair stage launches."""
+    QUALIFY cuts. Past ``PAIR_GUARD_MIN_BYTES`` of the larger corpus,
+    sum(d_new * d_seen) over matched buckets is priced before the pair
+    stage launches."""
     sig_new = minhash_signatures(
         new_docs, content_col, id_col, n, num_hashes, seed
     ).localCheckpoint(eager=False)
@@ -756,8 +772,7 @@ def minhash_cross_corpus_dupes(
         rows,
         max_docs_per_band_key,
         "max_docs_per_band_key",
-        disk_guard,
-        pair_disk_budget,
+        _guarded(new_docs, seen_docs),
         cross=True,
     )
     return _est_jaccard_pairs(
@@ -823,7 +838,6 @@ def simhash_dupes(
     content_col: str = "text",
     id_col: str = "doc_id",
     max_hamming: int = 8,
-    disk_guard: bool = False,
 ) -> DataFrame:
     """SimHash near-dup pairs: 60-bit fingerprints, banded by 15-bit chunks
     so candidate pairs share at least one exact band (pigeonhole: any pair
@@ -832,15 +846,16 @@ def simhash_dupes(
     so the registry entry is fully oracle-checked against a generated
     DuckDB twin.
 
-    ``disk_guard`` prices the banded candidate volume before the self-join
-    launches (:func:`pair_disk_guard`) — SimHash was the one pair
-    generator without it, and its 15-bit band space saturates: 5M docs /
+    Past ``PAIR_GUARD_MIN_BYTES`` of input the banded candidate volume is
+    priced before the self-join launches (:func:`pair_guard`): the
+    15-bit band space saturates — 5M docs /
     32,768 buckets x 4 bands averages ~600 docs per bucket, ~6e9
     candidate pairs at sf100 — the same blast class the r8 ENOSPC came
     from, now a clear fail-fast naming the lever instead.
     """
+    guard = _guarded(df)
     fp = simhash_fingerprints(df, content_col, id_col)
-    if disk_guard:
+    if guard:
         fp = fp.localCheckpoint(eager=False)
     bands = fp.select(
         "doc",
@@ -859,8 +874,8 @@ def simhash_dupes(
             )
         ).alias("bk"),
     ).select("doc", "fp", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    if disk_guard:
-        pair_disk_guard(
+    if guard:
+        pair_guard(
             bands,
             ["band", "key"],
             lever="a band-key bucket cap for simhash_dupes",

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .dedup import _guarded, connected_components, pair_guard
 
 def normalize_name(col: Column) -> Column:
     """Case-fold, trim, and collapse internal whitespace runs."""
@@ -84,8 +85,6 @@ def fuzzy_name_pairs(
     id_col: str,
     max_distance: int = 2,
     max_names_per_block: int | None = None,
-    disk_guard: bool = False,
-    pair_disk_budget: int | None = None,
 ) -> DataFrame:
     """Near-identical name pairs: (name_a, name_b, id_a, id_b, rows_a,
     rows_b, edit_distance), name_a < name_b, distance <= ``max_distance``.
@@ -99,7 +98,9 @@ def fuzzy_name_pairs(
     The prefix/suffix passes key on only 4 chars, so block sizes grow with
     corpus size — at scale pass ``max_names_per_block`` to cap the O(b^2)
     within-block comparison (the cap drops oversized blocks from those
-    passes only; token passes still cover their names).
+    passes only; token passes still cover their names). Past
+    ``dedup.PAIR_GUARD_MIN_BYTES`` of input the blocked pair volume is
+    priced before the self-join launches, naming that cap.
     """
     names = name_dictionary(df, name_col, id_col)
     keyed = None
@@ -123,7 +124,7 @@ def fuzzy_name_pairs(
             )
             .drop("__bn")
         )
-    if disk_guard:
+    if _guarded(df):
         # r10 verdict item 5: the prefix/suffix passes key on only 4
         # chars, so block sizes grow with corpus size and this was one of
         # two pair generators of the r8 ENOSPC blast class without an
@@ -135,13 +136,10 @@ def fuzzy_name_pairs(
         # break the self-join's ReusedExchange and its size statistics.
         # When the cap already filtered `keyed`, the price reflects the
         # post-cap volume, as it must.
-        from .dedup import pair_disk_guard
-
-        pair_disk_guard(
+        pair_guard(
             keyed.select("pass_", "bkey"),
             ["pass_", "bkey"],
             lever="max_names_per_block",
-            budget_bytes=pair_disk_budget,
         )
     # No persist: the self-join's two sides are the identical subplan
     # exchanged on the same keys, so Catalyst reuses one shuffle
@@ -180,8 +178,6 @@ def resolve_entities(
     id_col: str,
     max_distance: int = 2,
     max_names_per_block: int | None = None,
-    disk_guard: bool = False,
-    pair_disk_budget: int | None = None,
 ) -> DataFrame:
     """Cluster near-identical names and pick a canonical spelling per
     cluster: (name, rep_id, n_rows, cluster_id, canonical_name).
@@ -193,11 +189,8 @@ def resolve_entities(
     broadcast back onto the dictionary — cluster count is bounded by the
     dictionary size, so the join-back never becomes the wide side.
     """
-    from .dedup import connected_components
-
     names = fuzzy_name_pairs(
-        df, name_col, id_col, max_distance, max_names_per_block,
-        disk_guard=disk_guard, pair_disk_budget=pair_disk_budget,
+        df, name_col, id_col, max_distance, max_names_per_block
     )
     comps = connected_components(names, a_col="name_a", b_col="name_b")
     dictionary = name_dictionary(df, name_col, id_col)

@@ -33,6 +33,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import text as T
+from .partitioning import plan_bytes, spread
 
 #: Memory-size cap for broadcasting the materialized bigram model in the
 #: scoring join. This is an OPERATOR-level decision, deliberately larger
@@ -43,8 +44,7 @@ from ..functions import text as T
 #: materializes), so a few hundred MB of broadcast is the cheap side of
 #: the trade. The stats come from the checkpoint's actual block sizes
 #: (deserialized), not an estimate; a real web corpus's bigram model
-#: (tens of GB) exceeds the cap and falls back to the shuffle join with
-#: the ``shuffle_hash_joins`` lever.
+#: (tens of GB) exceeds the cap and falls back to a shuffle_hash join.
 BROADCAST_MODEL_MAX_BYTES = 512 << 20
 
 
@@ -103,7 +103,6 @@ def doc_lm_scores(
     df: DataFrame,
     content_col: str = "text",
     id_col: str = "doc_id",
-    shuffle_hash_joins: bool = False,
 ) -> DataFrame:
     """(id, n_bigrams, cross_entropy, perplexity) under the corpus's own
     add-one bigram model. Lower = more typical of the corpus; documents
@@ -112,15 +111,12 @@ def doc_lm_scores(
     The scoring join broadcasts the materialized model while its ACTUAL
     checkpoint bytes fit ``BROADCAST_MODEL_MAX_BYTES`` — the zero-
     corpus-shuffle shape (see the model comment below). Past the cap the
-    planner keeps a shuffle join, and ``shuffle_hash_joins`` is the
-    third-decade lever there: without it the planner picks SortMergeJoin
+    join is hinted shuffle_hash: unhinted, the planner picks SortMergeJoin
     and SORTS the corpus-scaled bigram relation (measured sf100, r12
     single-join shapes: 82.4s SMJ vs 72.6s shuffle_hash vs 63.7s
-    broadcast, values identical). At bench scale a hint would BLOCK AQE's
-    runtime broadcast conversion, so it stays suite-gated on corpus size.
+    broadcast, values identical). Only a model past the cap reaches that
+    branch, so no bench-scale plan carries the hint.
     """
-    from .partitioning import spread
-
     df = spread(df, id_col)
     # Two corpus tokenize passes TOTAL, zero corpus-scale materialization
     # (r12; the r11 shape eagerly checkpointed the full token-ARRAY frame
@@ -224,22 +220,17 @@ def doc_lm_scores(
     # without column stats blows up and the planner falls back to sort-
     # merge (the r12 proj-variant stage table in PLANS.md). Threshold-
     # decided, never forced: a real web corpus's bigram table can exceed
-    # any broadcast budget, in which case the planner keeps the shuffle
-    # join and ``shuffle_hash_joins`` remains the third-decade lever
+    # any broadcast budget, in which case the join is hinted shuffle_hash
     # (sf100: 72.6s shuffle_hash vs 82.4s SMJ).
     model = big.join(uni.withColumnRenamed("w", "prev"), "prev").localCheckpoint(
         eager=True
     )
     msize = ckpt_actual_bytes(model)
     if msize is None:
-        msize = int(
-            str(
-                model._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-            )
-        )
+        msize = plan_bytes(model)
     if msize <= BROADCAST_MODEL_MAX_BYTES:
         model = F.broadcast(model)
-    elif shuffle_hash_joins:
+    else:
         model = model.hint("shuffle_hash")
     scored = (
         pairs.join(model, ["prev", "cur"], "left")

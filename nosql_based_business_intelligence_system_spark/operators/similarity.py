@@ -24,8 +24,11 @@ per-batch top-k of brute force, RP-LSH and PQ-ADC, and ``_propose_cells``,
 the nearest-centroid proposal of IVF assignment and PQ encoding. Each
 operator picks its tier itself: RP-LSH takes the Arrow tier whenever the
 selector accepts; brute force and PQ take it once the corpus plan's size
-estimate reaches ``_ARROW_MIN_BYTES``; nearest-cell assignment past
-``_NEAREST_CELL_ARROW_K`` centroids.
+estimate reaches ``partitioning.LARGE_INPUT_BYTES`` (``is_large``): below
+it the Arrow pass's fixed cost (query collect, broadcast, Python workers,
+a rescore stage) loses to the expression plan, while at sf100 the
+expression pair stage runs in the bytecode interpreter; nearest-cell
+assignment past ``_NEAREST_CELL_ARROW_K`` centroids.
 """
 
 from __future__ import annotations
@@ -34,7 +37,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import vectors as V
-from .dedup import _lsh_candidate_pairs, _sh
+from .dedup import _guarded, _lsh_candidate_pairs, _sh
+from .partitioning import is_large, spread
 
 #: The Arrow top-k selector collects and broadcasts the query side; past
 #: this many query rows it declines and the operator keeps its expression
@@ -46,25 +50,7 @@ BF_TOPK_MAX_QUERIES = 10_000
 #: ``threshold - EPS`` and the exact filter happens on the fold score.
 _CAND_EPS = 1e-9
 
-#: Corpus plan size estimate from which brute force and PQ take the Arrow
-#: tier: about 1M 64-dim embedding rows. The estimate reads 387-399 B per
-#: row on the sf0.01/sf0.1 fixtures (500 and 2k vectors) and 262 B on a
-#: tools/make_sf.py sf1 (20k), so sf10 (200k vectors, 52-80 MB) stays on
-#: expressions and sf100 (2M, 0.52-0.8 GB) crosses. Below it the Arrow
-#: pass's fixed cost (query collect, broadcast, Python workers, a rescore
-#: stage) loses to the expression plan; at sf100 the expression pair stage
-#: runs in the bytecode interpreter and the Arrow tier wins (brute force
-#: 53.2s -> 2.0s, PQ 93.6s -> 11.4s; PLANS.md).
-_ARROW_MIN_BYTES = 384 << 20
-
 _INTEGRAL = ("tinyint", "smallint", "int", "bigint")
-
-
-def _plan_bytes(df: DataFrame) -> int:
-    """Catalyst's size estimate of ``df``'s optimized plan; starts no job."""
-    return int(
-        str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    )
 
 
 def _topk(scored: DataFrame, k: int) -> DataFrame:
@@ -184,7 +170,7 @@ def brute_force_topk(
     than it saves on small corpora), else it's probed from one corpus row.
 
     Cosine with a known ``dim`` over a corpus whose plan estimate reaches
-    ``_ARROW_MIN_BYTES`` takes the Arrow tier (:func:`_select_topk`). At
+    ``LARGE_INPUT_BYTES`` takes the Arrow tier (:func:`_select_topk`). At
     that scale the 64-term unrolled dot generates a codegen method past
     HotSpot's huge-method limit, so the expression pair stage runs in the
     bytecode interpreter (~5.7us/pair; sf100, 2M corpus x 5 queries: 57s
@@ -214,16 +200,10 @@ def brute_force_topk(
         dim = len(probe[0]) if probe and probe[0] is not None else None
     # Norms are per-ROW, not per-pair (same doubles as per-pair cosine:
     # identical ops on identical operands in the same left-assoc order).
-    from .partitioning import spread
-
     q = queries.select(
         F.col(id_col).alias("query_id"), V.as_double(F.col(vec_col)).alias("qv")
     ).withColumn("qn", V.norm("qv"))
-    if (
-        metric == "cosine"
-        and dim is not None
-        and _plan_bytes(corpus) >= _ARROW_MIN_BYTES
-    ):
+    if metric == "cosine" and dim is not None and is_large(corpus):
 
         def prep(rows):
             # a NULL query vector becomes a NaN row: its scores are all
@@ -386,8 +366,6 @@ def rp_bucket_topk(
         cand &= aid[:, None] != qids[None, :]
         pay = pd.DataFrame({"nv": pdf["v"].to_numpy()})
         return _cosines(a, qmat, qn), cand, None, pay
-
-    from .partitioning import spread
 
     q = queries.select(
         F.col(id_col).alias("query_id"),
@@ -561,8 +539,6 @@ def embedding_cosine_dupes(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     seed: int = 42,
-    disk_guard: bool = False,
-    pair_disk_budget: int | None = None,
     max_ids_per_band_key: int | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs at scale: random-hyperplane LSH.
@@ -573,10 +549,12 @@ def embedding_cosine_dupes(
     candidate pairs, and at sign-LSH an over-full bucket means a dense
     direction cluster, not duplication. Pairs whose EVERY collision band
     is capped are lost (recall, not precision); OFF by default so the
-    frozen registry entry keeps its verified recall contract.
-    ``disk_guard`` prices the kept buckets' pairs before any pair row
-    exists — candidates come from the bucket-list generator shared with
-    the MinHash operators (``dedup._lsh_candidate_pairs``).
+    frozen registry entry keeps its verified recall contract. Past
+    ``dedup.PAIR_GUARD_MIN_BYTES`` of input the kept buckets' pairs are
+    priced before any pair row exists — candidates come from the
+    bucket-list generator shared with the MinHash operators
+    (``dedup._lsh_candidate_pairs``); a degenerate (constant-ish)
+    embedding column keys everything into a handful of buckets.
 
     Signature = sign bits of ``n_planes`` Rademacher (+-1) projections —
     Achlioptas-style random projections give the same sign-LSH guarantee
@@ -633,8 +611,7 @@ def embedding_cosine_dupes(
             rows,
             max_ids_per_band_key,
             "max_ids_per_band_key",
-            disk_guard,
-            pair_disk_budget,
+            _guarded(df),
         )
         # a vec_id on several rows is listed once per row: drop its
         # pairs with itself
@@ -883,8 +860,6 @@ def ivf_assign(
         StructField,
         StructType,
     )
-
-    from .partitioning import spread
 
     # parallelism guard for the O(rows x K) assignment stage (see
     # brute_force_topk): one sub-split-size embedding file would run the
@@ -1248,7 +1223,7 @@ def pq_train_encode(
     Scale shape: training is groupBy (j, code, pos) averages over the
     exploded corpus — partial aggregation applies; encoding is a broadcast
     join + per-(id, j) argmin, no per-subspace jobs. Once the corpus plan
-    estimate reaches ``_ARROW_MIN_BYTES`` the argmin scores only the codes
+    estimate reaches ``LARGE_INPUT_BYTES`` the argmin scores only the codes
     :func:`_propose_cells` proposes per subspace instead of rows x
     k_codes interpreted euclideans; the exact fold distance + min_by
     tie-break still decide, so assignments are identical (pin-tested).
@@ -1261,9 +1236,7 @@ def pq_train_encode(
     """
     from pyspark.storagelevel import StorageLevel
 
-    from .partitioning import spread
-
-    arrow = _plan_bytes(corpus) >= _ARROW_MIN_BYTES
+    arrow = is_large(corpus)
     # materialize-before-reuse: every Lloyd round AND the final encode
     # re-reference the subvector table — without the persist the scan +
     # normalize + split would re-execute per use (and on a one-file local
@@ -1388,7 +1361,7 @@ def pq_topk(
     quantization error stops costing recall without giving up the
     narrow-scan candidate stage.
 
-    Once the corpus plan estimate reaches ``_ARROW_MIN_BYTES`` the ADC
+    Once the corpus plan estimate reaches ``LARGE_INPUT_BYTES`` the ADC
     rank stage takes the Arrow tier (:func:`_select_topk`): without it
     the window sorts the FULL corpus-scaled scored relation with |Q|-way
     parallelism (at sf100: 5M rows through 5 tasks). Each batch's ADC
@@ -1436,7 +1409,7 @@ def pq_topk(
     )
     keep_n = k * max(rerank_factor, 1)
     top = None
-    if _plan_bytes(corpus) >= _ARROW_MIN_BYTES:
+    if is_large(corpus):
 
         def prep(rows):
             # flat (|Q|, m*k_codes) table; holes (codes emptied by Lloyd

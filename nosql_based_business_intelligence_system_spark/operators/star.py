@@ -37,7 +37,6 @@ from ..sources.tables import load_table
 def enriched_sales(
     spark: SparkSession,
     sf_dir: str,
-    fiscal_cols: bool = True,
     columns: "set[str] | frozenset[str] | None" = None,
 ) -> DataFrame:
     """The ClearVue-shaped wide sales table over the fixture star schema.
@@ -48,14 +47,6 @@ def enriched_sales(
     last_cost, event_date, asp, cogs, gross_margin, gm_pct, flag_*,
     fin_month_label, fin_month_start, fin_month_end, fin_year,
     fin_month_num, fin_quarter.
-
-    ``fiscal_cols=False`` skips the calendar-dim join. Queries that never
-    touch a fiscal column must opt out explicitly: Catalyst cannot
-    eliminate an unused left join (it would have to prove the dim key
-    unique), so leaving the join in forces ``l_shipdate`` into every
-    lineitem scan — with the pure-expression fiscal variant the unused
-    columns pruned away for free, and this flag preserves that property
-    under the (faster for fiscal users) dim-join default.
 
     ``columns`` is constraint-aware JOIN ELIMINATION, the informational-FK
     optimization warehouses apply and Spark has no metadata for: pass the
@@ -68,8 +59,11 @@ def enriched_sales(
     (``DD_SALES_CTE``) stays the semantic proof in every oracle run.
     Catalyst cannot do this itself (inner joins may filter in general),
     which is why it's declared here, at the layer that owns the
-    constraint knowledge. ``columns`` also implies the fiscal switch:
-    the calendar join is built only if a ``fin_*`` column is requested.
+    constraint knowledge. ``columns`` also decides the calendar-dim join:
+    it is built only if a ``fin_*`` column is requested (Catalyst cannot
+    eliminate an unused left join either, and leaving it in would force
+    ``l_shipdate`` into every lineitem scan). ``columns=None`` builds
+    every join, the calendar one included.
     """
     if columns is not None:
         cols = set(columns)
@@ -78,10 +72,10 @@ def enriched_sales(
         need_nation = bool(cols & _NATION_COLS) or need_region
         need_customer = bool(cols & _CUSTOMER_COLS) or need_nation
         need_orders = bool(cols & _ORDERS_COLS) or need_customer
-        fiscal_cols = any(c.startswith("fin_") for c in cols)
+        need_fiscal = any(c.startswith("fin_") for c in cols)
     else:
         need_part = need_orders = need_customer = True
-        need_nation = need_region = True
+        need_nation = need_region = need_fiscal = True
     li = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("doc_number"),
         F.col("l_linenumber").alias("line_number"),
@@ -136,7 +130,7 @@ def enriched_sales(
     # the full chain already consumed them
     df = df.drop("l_partkey", "c_nationkey", "n_regionkey")
     df = with_sales_metrics(df, with_cost=need_part)
-    if fiscal_cols:
+    if need_fiscal:
         df = fiscal.with_fiscal_columns_via_dim(df, spark, "event_date")
     return df
 

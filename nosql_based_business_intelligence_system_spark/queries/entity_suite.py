@@ -6,37 +6,21 @@ free-text label columns the reference groups on (Project.py:124-140).
 Both queries are fully oracle-checked: Spark's ``levenshtein`` and
 DuckDB's compute the same classic edit distance, and the transitive
 closure has a recursive-CTE twin (same pattern as dedup_clusters).
+
+The operators guard their own blocking self-join: past
+``dedup.PAIR_GUARD_MIN_BYTES`` of ``part`` plan estimate (sf1 and up)
+the pair volume is priced before it launches; the fixtures stay below.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..caching import SessionCache
 from ..operators import entity
 from ..sources.tables import load_table
 from .base import Query as _q
 
 _MAX_DIST = 3
-
-#: Part rows above which the blocking self-join prices its candidate
-#: volume against the scratch disk before launching (the same admission
-#: threshold as text_suite.PAIR_GUARD_MIN_DOCS — engages at sf10's 2M
-#: parts, skips the sub-second bench fixtures).
-PAIR_GUARD_MIN_ROWS = 100_000
-
-_PART_COUNT_CACHE = SessionCache("part-count", capacity=8, holds_storage=False)
-
-
-def _pair_guard_on(spark, sf_dir) -> bool:
-    return (
-        _PART_COUNT_CACHE.get_or_build(
-            spark,
-            (sf_dir,),
-            lambda: load_table(spark, sf_dir, "part").count(),
-        )
-        >= PAIR_GUARD_MIN_ROWS
-    )
 
 
 def part_name_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -45,8 +29,7 @@ def part_name_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     comparison."""
     part = load_table(spark, sf_dir, "part")
     return entity.fuzzy_name_pairs(
-        part, "p_name", "p_partkey", max_distance=_MAX_DIST,
-        disk_guard=_pair_guard_on(spark, sf_dir),
+        part, "p_name", "p_partkey", max_distance=_MAX_DIST
     )
 
 
@@ -85,8 +68,7 @@ def part_name_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the cluster's canonical (most-frequent) spelling."""
     part = load_table(spark, sf_dir, "part")
     return entity.resolve_entities(
-        part, "p_name", "p_partkey", max_distance=_MAX_DIST,
-        disk_guard=_pair_guard_on(spark, sf_dir),
+        part, "p_name", "p_partkey", max_distance=_MAX_DIST
     )
 
 

@@ -507,14 +507,11 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall is covered in tests/test_similarity.py. Fully oracle-checked:
     the Rademacher planes are md5-derived literals the generated DuckDB
     twin inlines, and candidate scores use the proven-portable
-    inner-product cosine."""
+    inner-product cosine. The operator prices its own candidate pairs
+    once the table's plan estimate reaches dedup.PAIR_GUARD_MIN_BYTES
+    (sf1 and up)."""
     return similarity.embedding_cosine_dupes(
-        _emb(spark, sf_dir), threshold=0.9, n_planes=64, bands=4,
-        # admission check past bench scale: with 2^16 buckets per band the
-        # sf100 embedding corpus (2M rows) averages ~30 ids/bucket — fine —
-        # but a degenerate (constant-ish) embedding column keys everything
-        # into a handful of buckets; price it instead of ENOSPCing
-        disk_guard=_emb_count(spark, sf_dir) >= 100_000,
+        _emb(spark, sf_dir), threshold=0.9, n_planes=64, bands=4
     )
 
 

@@ -16,39 +16,13 @@ from ..caching import SessionCache
 from ..functions import text as T
 from ..functions.cleaning import dd_dsumd, dsumd
 from ..operators import decontam, dedup, heavyhitters, lm
+from ..operators.partitioning import is_large
 from ..sources.tables import load_table
 from .base import Query as _q
 
 
 def _docs(spark, sf_dir):
     return load_table(spark, sf_dir, "documents")
-
-
-#: Corpus rows above which text queries switch on third-decade join/plan
-#: levers (tools/make_sf.py: sf10's 500k docs keep the verified
-#: small-scale plans, sf100's 5M cross).
-TEXT_SCALE_MIN_DOCS = 1_000_000
-
-_DOCS_COUNT_CACHE = SessionCache("docs-count", capacity=8, holds_storage=False)
-
-
-def _docs_count(spark, sf_dir) -> int:
-    return _DOCS_COUNT_CACHE.get_or_build(
-        spark, (sf_dir,), lambda: _docs(spark, sf_dir).count()
-    )
-
-
-#: Corpus rows above which pair-generating dedup queries price their
-#: candidate volume against the scratch disk before the pair stage launches
-#: (operators/dedup.pair_disk_guard). Lower than TEXT_SCALE_MIN_DOCS on
-#: purpose: the r8 ENOSPC blast happened at sf10 (500k docs), and the
-#: guard's one narrow aggregate is noise at that scale — only the
-#: sub-second bench fixtures (<=50k docs) skip it.
-PAIR_GUARD_MIN_DOCS = 100_000
-
-
-def _pair_guard_on(spark, sf_dir) -> bool:
-    return _docs_count(spark, sf_dir) >= PAIR_GUARD_MIN_DOCS
 
 
 # --- per-doc text statistics -------------------------------------------------
@@ -251,8 +225,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs with trigram-shingle Jaccard >= 0.5 (shingle-key join,
     never O(n^2)); oracle recomputes the identical pipeline in SQL."""
     return dedup.ngram_jaccard_dupes(
-        _docs(spark, sf_dir), n=3, threshold=0.5,
-        disk_guard=_pair_guard_on(spark, sf_dir),
+        _docs(spark, sf_dir), n=3, threshold=0.5
     )
 
 
@@ -278,8 +251,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     the iterative Spark algorithm against a recursive SQL closure
     (DuckDB WITH RECURSIVE)."""
     pairs = dedup.ngram_jaccard_dupes(
-        _docs(spark, sf_dir), n=3, threshold=0.5,
-        disk_guard=_pair_guard_on(spark, sf_dir),
+        _docs(spark, sf_dir), n=3, threshold=0.5
     )
     cc = dedup.connected_components(pairs)
     return cc.groupBy(F.col("comp").alias("cluster_id")).agg(
@@ -325,9 +297,7 @@ def dedup_fuzzy_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup.dedup_connected_keep_min). The downstream \"write the cleaned
     corpus\" step of a training-data pipeline, fully oracle-checked."""
     docs = _docs(spark, sf_dir)
-    pairs = dedup.ngram_jaccard_dupes(
-        docs, n=3, threshold=0.5, disk_guard=_pair_guard_on(spark, sf_dir)
-    )
+    pairs = dedup.ngram_jaccard_dupes(docs, n=3, threshold=0.5)
     return dedup.dedup_connected_keep_min(pairs, docs.select("doc_id")).select(
         "doc_id"
     )
@@ -616,7 +586,6 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return dedup.minhash_lsh_dupes(
         _docs(spark, sf_dir), jaccard_threshold=0.5, signatures=sig,
-        disk_guard=_pair_guard_on(spark, sf_dir),
     ).select("doc_a", "doc_b", "est_jaccard")
 
 
@@ -652,7 +621,6 @@ def dedup_minhash_guarded(spark: SparkSession, sf_dir: str) -> DataFrame:
         jaccard_threshold=0.5,
         signatures=sig,
         max_docs_per_band_key=50,
-        disk_guard=_pair_guard_on(spark, sf_dir),
     ).select("doc_a", "doc_b", "est_jaccard")
 
 
@@ -775,7 +743,6 @@ def dedup_fuzzy_keep_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = dedup.minhash_lsh_dupes(
         docs, jaccard_threshold=0.5, signatures=sig,
         max_docs_per_band_key=MINHASH_BAND_CAP,
-        disk_guard=_pair_guard_on(spark, sf_dir),
     )
     return dedup.dedup_connected_keep_min(pairs, docs.select("doc_id")).select(
         "doc_id"
@@ -807,7 +774,6 @@ def dedup_clusters_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).localCheckpoint(eager=False),
         ),
         max_docs_per_band_key=MINHASH_BAND_CAP,
-        disk_guard=_pair_guard_on(spark, sf_dir),
     )
     cc = dedup.connected_components(pairs)
     return cc.groupBy(F.col("comp").alias("cluster_id")).agg(
@@ -847,7 +813,6 @@ def dedup_cross_corpus_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.filter(seen),
         jaccard_threshold=0.5,
         max_docs_per_band_key=MINHASH_BAND_CAP,
-        disk_guard=_pair_guard_on(spark, sf_dir),
     )
 
 
@@ -900,10 +865,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs, fully oracle-checked: 60-bit fingerprints
     over the portable md5 base hash, 15-bit band pigeonhole, bit_count
     Hamming — all reproduced by the generated DuckDB twin."""
-    return dedup.simhash_dupes(
-        _docs(spark, sf_dir), max_hamming=3,
-        disk_guard=_pair_guard_on(spark, sf_dir),
-    )
+    return dedup.simhash_dupes(_docs(spark, sf_dir), max_hamming=3)
 
 
 def _dd_simhash_sql(max_hamming: int = 3) -> str:
@@ -1648,14 +1610,7 @@ def doc_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     bigram model (operators/lm.py) — the perplexity-filter signal of web
     curation pipelines, bootstrapped without an external model. Rounded to
     6 decimals on both engines (libm vs JVM log ulp drift)."""
-    return lm.doc_lm_scores(
-        _docs(spark, sf_dir),
-        # above the line: shuffle_hash the count-table joins (sf100:
-        # 82.5 -> 61.7s, the double sort of 265M bigram rows); below:
-        # let AQE broadcast-convert at runtime (hinting costs +13% at
-        # bench scale). See lm.doc_lm_scores docstring.
-        shuffle_hash_joins=_docs_count(spark, sf_dir) >= TEXT_SCALE_MIN_DOCS,
-    )
+    return lm.doc_lm_scores(_docs(spark, sf_dir))
 
 
 DOC_LM_PERPLEXITY_SQL = f"""WITH toks AS (
@@ -1722,9 +1677,10 @@ def token_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     output; the estimate-bound properties are pytest-asserted in
     tests/test_heavyhitters.py.)
 
-    TARGETED EXACT SECOND PASS (r9, gated >= TEXT_SCALE_MIN_DOCS): below
-    the gate, one lazy plan computes the exact counts as a full-domain
-    groupBy — fine when the domain is small, and it keeps the verified
+    TARGETED EXACT SECOND PASS (r9, taken once the documents plan
+    estimate reaches ``partitioning.LARGE_INPUT_BYTES``): below the gate,
+    one lazy plan computes the exact counts as a full-domain groupBy —
+    fine when the domain is small, and it keeps the verified
     sf0.01/sf0.1 plan byte-for-byte. Above it, the full-domain shuffle IS
     the cost (sf100's marker-injected corpus has ~48M distinct tokens for
     270M occurrences; r8 measured 92.0s): instead, run the sketch job
@@ -1737,18 +1693,15 @@ def token_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     certified output — and the oracle hash — is unchanged; the join
     against the collected sketch (rebuilt as a literal frame, not
     recomputed) still drops any row the sketch missed."""
-    toks = _docs(spark, sf_dir).select(
-        F.explode(T.tokens(F.col("text"))).alias("tok")
-    )
+    docs = _docs(spark, sf_dir)
+    toks = docs.select(F.explode(T.tokens(F.col("text"))).alias("tok"))
     # sketch over RAW TEXT (r11): tokenization happens inside the Arrow
     # partials, so the JVM->Python boundary carries one cell per doc, not
     # one per token — sf100: ~2s vs 10-44s for the exploded transfer (and
     # no repartition of the exploded stream). The exact pass below keeps
     # the JVM-side tokens(); the two tokenizers are parity-pinned.
-    sketch = heavyhitters.mg_heavy_hitters_text(
-        _docs(spark, sf_dir), "text", k=MG_K
-    )
-    if _docs_count(spark, sf_dir) >= TEXT_SCALE_MIN_DOCS:
+    sketch = heavyhitters.mg_heavy_hitters_text(docs, "text", k=MG_K)
+    if is_large(docs):
         rows = sketch.collect()  # <= MG_K rows by construction
         if not rows:
             return spark.createDataFrame(

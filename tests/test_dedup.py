@@ -374,7 +374,7 @@ def test_minhash_cross_corpus_asymmetric(spark):
         assert r.est_jaccard == 1.0
 
 
-def test_cross_pair_disk_guard_fires_on_blast(spark):
+def test_cross_pair_disk_guard_fires_on_blast(spark, monkeypatch):
     """An exact-duplicate blast across both corpora keys one giant
     matched band bucket per band; the cross guard must price A*B pairs
     and fail fast naming the cap lever BEFORE the bucket join."""
@@ -383,17 +383,17 @@ def test_cross_pair_disk_guard_fires_on_blast(spark):
     seen = spark.createDataFrame(
         [Row(doc_id=1000 + i, text=text) for i in range(60)]
     )
+    monkeypatch.setattr(dedup, "PAIR_GUARD_MIN_BYTES", 0)
+    monkeypatch.setenv("SPARK_GRAFT_PAIR_DISK_BUDGET", "1024")
     with pytest.raises(dedup.PairExplosionError, match="max_docs_per_band_key"):
         dedup.minhash_cross_corpus_dupes(
-            new, seen, jaccard_threshold=0.5, disk_guard=True,
-            pair_disk_budget=1024,
+            new, seen, jaccard_threshold=0.5
         ).count()
     # an ACTIVE per-side cap removes the blast buckets from the price, so
     # the same budget passes (guard mirrors the drop-then-pair semantics)
     assert (
         dedup.minhash_cross_corpus_dupes(
-            new, seen, jaccard_threshold=0.5, disk_guard=True,
-            pair_disk_budget=1024, max_docs_per_band_key=10,
+            new, seen, jaccard_threshold=0.5, max_docs_per_band_key=10
         ).count()
         == 0
     )

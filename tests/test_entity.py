@@ -166,7 +166,17 @@ def test_pairs_self_join_holds_no_cache(spark):
     assert "InMemoryTableScan" not in I.explain_str(out, "formatted")
 
 
-def test_pair_disk_guard_fires_in_blocking_join(spark):
+def _force_guard(monkeypatch, budget=None):
+    """Run the pair guard at unit scale (gate at 0 bytes of input), with
+    an env budget when given, else the free scratch disk."""
+    from nosql_based_business_intelligence_system_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "PAIR_GUARD_MIN_BYTES", 0)
+    if budget is not None:
+        monkeypatch.setenv("SPARK_GRAFT_PAIR_DISK_BUDGET", str(budget))
+
+
+def test_pair_disk_guard_fires_in_blocking_join(spark, monkeypatch):
     """r10 verdict item 5: the blocking self-join prices its candidate
     volume before launching — a shared last token keys one giant block,
     and a 1 KB budget must fail fast naming max_names_per_block."""
@@ -176,25 +186,22 @@ def test_pair_disk_guard_fires_in_blocking_join(spark):
         PairExplosionError,
     )
 
+    _force_guard(monkeypatch, 1024)
     rows = [Row(id=i, name=f"name{i} corp") for i in range(100)]
     df = spark.createDataFrame(rows)
     with pytest.raises(PairExplosionError, match="max_names_per_block"):
-        entity.fuzzy_name_pairs(
-            df, "name", "id", max_distance=1, disk_guard=True,
-            pair_disk_budget=1024,
-        ).count()
+        entity.fuzzy_name_pairs(df, "name", "id", max_distance=1).count()
     # an ACTIVE cap removes the blast blocks from the price (the guard
     # runs on the post-cap frame), so the same budget passes
     assert (
         entity.fuzzy_name_pairs(
-            df, "name", "id", max_distance=1, disk_guard=True,
-            pair_disk_budget=1024, max_names_per_block=5,
+            df, "name", "id", max_distance=1, max_names_per_block=5
         ).count()
         == 0
     )
 
 
-def test_pair_disk_guard_noop_in_blocking_join(spark):
+def test_pair_disk_guard_noop_in_blocking_join(spark, monkeypatch):
     """Default budget (free scratch disk): guard is a pure no-op — same
     pairs as the unguarded plan."""
     rows = [Row(id=i, name=f"name{i} corp") for i in range(10)]
@@ -204,29 +211,26 @@ def test_pair_disk_guard_noop_in_blocking_join(spark):
         (r.name_a, r.name_b)
         for r in entity.fuzzy_name_pairs(df, "name", "id", max_distance=1).collect()
     }
+    _force_guard(monkeypatch)
     guarded = {
         (r.name_a, r.name_b)
-        for r in entity.fuzzy_name_pairs(
-            df, "name", "id", max_distance=1, disk_guard=True
-        ).collect()
+        for r in entity.fuzzy_name_pairs(df, "name", "id", max_distance=1).collect()
     }
     assert guarded == plain and plain
 
 
-def test_resolve_entities_forwards_pair_disk_budget(spark):
-    """r10 ADVICE: the clustering entry point must accept the same
-    explicit budget as fuzzy_name_pairs (API symmetry with the other
-    guarded operators), not only the env var."""
+def test_resolve_entities_forwards_pair_disk_budget(spark, monkeypatch):
+    """r10 ADVICE: the clustering entry point must be guarded like
+    fuzzy_name_pairs — its blocking self-join fails fast under the same
+    budget, naming the same lever."""
     import pytest
 
     from nosql_based_business_intelligence_system_spark.operators.dedup import (
         PairExplosionError,
     )
 
+    _force_guard(monkeypatch, 1024)
     rows = [Row(id=i, name=f"name{i} corp") for i in range(100)]
     df = spark.createDataFrame(rows)
     with pytest.raises(PairExplosionError, match="max_names_per_block"):
-        entity.resolve_entities(
-            df, "name", "id", max_distance=1, disk_guard=True,
-            pair_disk_budget=1024,
-        ).count()
+        entity.resolve_entities(df, "name", "id", max_distance=1).count()

@@ -85,7 +85,9 @@ def test_targeted_exact_pass_matches_full_domain(spark, sf_correctness, monkeypa
         (r.item, r.exact_count, r.n_total)
         for r in text_suite.token_heavy_hitters(spark, sf_correctness).collect()
     }
-    monkeypatch.setattr(text_suite, "TEXT_SCALE_MIN_DOCS", 0)
+    from nosql_based_business_intelligence_system_spark.operators import partitioning
+
+    monkeypatch.setattr(partitioning, "LARGE_INPUT_BYTES", 0)
     # gate now active at fixture scale -> targeted path
     targeted = {
         (r.item, r.exact_count, r.n_total)

@@ -53,6 +53,13 @@ def _embedding(spark, rows, **kw):
     return sorted((r.id_a, r.id_b) for r in out.collect())
 
 
+def _guard(monkeypatch, budget: int) -> None:
+    """Run the disk guard at unit scale (gate at 0 bytes of input) under
+    a ``budget``-byte scratch budget."""
+    monkeypatch.setattr(dedup, "PAIR_GUARD_MIN_BYTES", 0)
+    monkeypatch.setenv("SPARK_GRAFT_PAIR_DISK_BUDGET", str(budget))
+
+
 #: operator -> (runner, name of its bucket-cap argument = the guard's lever)
 OPS = {
     "minhash": (_minhash, "max_docs_per_band_key"),
@@ -62,22 +69,24 @@ OPS = {
 
 
 @pytest.mark.parametrize("op", OPS)
-def test_empty_input_with_guard_gives_no_pairs(spark, op):
+def test_empty_input_with_guard_gives_no_pairs(spark, op, monkeypatch):
     run, _ = OPS[op]
-    assert run(spark, [], disk_guard=True, pair_disk_budget=0) == []
+    _guard(monkeypatch, 0)
+    assert run(spark, []) == []
 
 
 @pytest.mark.parametrize("op", OPS)
-def test_singleton_buckets_give_no_pairs(spark, op):
+def test_singleton_buckets_give_no_pairs(spark, op, monkeypatch):
     """Every bucket holds one id: nothing pairs, and nothing is priced —
     the guard passes a zero-byte budget."""
     run, _ = OPS[op]
     rows = [(i, i, ("new", "seen")[i % 2]) for i in range(8)]
-    assert run(spark, rows, disk_guard=True, pair_disk_budget=0) == []
+    _guard(monkeypatch, 0)
+    assert run(spark, rows) == []
 
 
 @pytest.mark.parametrize("op", OPS)
-def test_hot_bucket_fails_fast_and_cap_drops_it(spark, op):
+def test_hot_bucket_fails_fast_and_cap_drops_it(spark, op, monkeypatch):
     """60 identical items fill one bucket per band: the guard raises under
     a 1 KB budget naming the cap, and a cap below the bucket size drops
     the bucket, so the same budget passes with no pairs."""
@@ -85,19 +94,18 @@ def test_hot_bucket_fails_fast_and_cap_drops_it(spark, op):
     rows = [(i, 0, ("new", "seen")[i % 2]) for i in range(60)] + [
         (100 + i, 1 + i, "new") for i in range(4)
     ]
+    _guard(monkeypatch, 1024)
     with pytest.raises(dedup.PairExplosionError, match=lever):
-        run(spark, rows, disk_guard=True, pair_disk_budget=1024)
-    assert (
-        run(spark, rows, disk_guard=True, pair_disk_budget=1024, **{lever: 10})
-        == []
-    )
+        run(spark, rows)
+    assert run(spark, rows, **{lever: 10}) == []
 
 
-def test_cross_bucket_on_one_side_gives_no_pairs(spark):
+def test_cross_bucket_on_one_side_gives_no_pairs(spark, monkeypatch):
     """Duplicates within one corpus share buckets on that side only: no
     cross pair, and the guard prices nothing."""
     rows = [(1, 0, "new"), (2, 0, "new"), (3, 1, "seen"), (4, 1, "seen")]
-    assert _minhash_cross(spark, rows, disk_guard=True, pair_disk_budget=0) == []
+    _guard(monkeypatch, 0)
+    assert _minhash_cross(spark, rows) == []
 
 
 @pytest.mark.parametrize("op", ["minhash", "embedding"])

@@ -9,7 +9,11 @@ import math
 import pytest
 from pyspark.sql import Row
 
-from nosql_based_business_intelligence_system_spark.operators import similarity
+from nosql_based_business_intelligence_system_spark.operators import (
+    dedup,
+    partitioning,
+    similarity,
+)
 from nosql_based_business_intelligence_system_spark.sources.tables import load_table
 
 VECS = [
@@ -32,7 +36,7 @@ def _tier(monkeypatch, arrow: bool):
     query side fits (-1 declines even an empty one)."""
     with monkeypatch.context() as m:
         if arrow:
-            m.setattr(similarity, "_ARROW_MIN_BYTES", 0)
+            m.setattr(partitioning, "LARGE_INPUT_BYTES", 0)
         else:
             m.setattr(similarity, "BF_TOPK_MAX_QUERIES", -1)
         yield
@@ -467,7 +471,7 @@ def test_nearest_cell_arrow_matches_crossjoin(spark, sf_correctness, monkeypatch
     assert cross.exceptAll(arrow).count() == 0
 
 
-def test_pair_disk_guard_fires_in_sign_lsh(spark):
+def test_pair_disk_guard_fires_in_sign_lsh(spark, monkeypatch):
     """r10 verdict item 5: identical vectors key one giant band bucket in
     every band; the guard must price d*(d-1)/2 per bucket and fail fast
     before the self-join, and be a pure no-op at the default budget."""
@@ -480,21 +484,23 @@ def test_pair_disk_guard_fires_in_sign_lsh(spark):
     df = spark.createDataFrame(
         [Row(vec_id=i, embedding=[1.0, 2.0, 3.0, 4.0]) for i in range(80)]
     )
+    monkeypatch.setattr(dedup, "PAIR_GUARD_MIN_BYTES", 0)
+    monkeypatch.setenv("SPARK_GRAFT_PAIR_DISK_BUDGET", "1024")
     with pytest.raises(PairExplosionError, match="max_ids_per_band_key"):
         similarity.embedding_cosine_dupes(
-            df, threshold=0.9, n_planes=16, bands=4, disk_guard=True,
-            pair_disk_budget=1024,
+            df, threshold=0.9, n_planes=16, bands=4
         ).count()
     # default budget: no-op, all pairs surface (identical vectors)
+    monkeypatch.delenv("SPARK_GRAFT_PAIR_DISK_BUDGET")
     assert (
         similarity.embedding_cosine_dupes(
-            df, threshold=0.9, n_planes=16, bands=4, disk_guard=True
+            df, threshold=0.9, n_planes=16, bands=4
         ).count()
         == 80 * 79 // 2
     )
 
 
-def test_sign_lsh_band_key_cap_bounds_bucket(spark):
+def test_sign_lsh_band_key_cap_bounds_bucket(spark, monkeypatch):
     """r10 ADVICE: the lever the guard names must exist and actually
     bound the bucket. 80 identical vectors fill ONE (band, key) bucket
     per band; a cap below 80 drops those buckets, so (a) the guard's
@@ -505,10 +511,12 @@ def test_sign_lsh_band_key_cap_bounds_bucket(spark):
     df = spark.createDataFrame(
         [Row(vec_id=i, embedding=[1.0, 2.0, 3.0, 4.0]) for i in range(80)]
     )
-    capped = similarity.embedding_cosine_dupes(
-        df, threshold=0.9, n_planes=16, bands=4, disk_guard=True,
-        pair_disk_budget=1024, max_ids_per_band_key=5,
-    )
+    with monkeypatch.context() as m:
+        m.setattr(dedup, "PAIR_GUARD_MIN_BYTES", 0)
+        m.setenv("SPARK_GRAFT_PAIR_DISK_BUDGET", "1024")
+        capped = similarity.embedding_cosine_dupes(
+            df, threshold=0.9, n_planes=16, bands=4, max_ids_per_band_key=5
+        )
     assert capped.count() == 0
     # cap above the bucket size: candidates unaffected
     uncut = similarity.embedding_cosine_dupes(

@@ -243,7 +243,7 @@ def test_minhash_band_key_guard_caps_giant_buckets(spark):
     assert {(a, b) for a, b in g} == want
 
 
-def test_pair_disk_guard_fires_on_blast_corpus(spark):
+def test_pair_disk_guard_fires_on_blast_corpus(spark, monkeypatch):
     """A corpus where every doc shares one boilerplate shingle is the
     ENOSPC class: d docs in one bucket = d*(d-1)/2 pairs. The guard must
     price that BEFORE the self-join and raise a clear error naming the
@@ -251,6 +251,8 @@ def test_pair_disk_guard_fires_on_blast_corpus(spark):
     deliberately tiny 1 KB budget."""
     import pytest
 
+    monkeypatch.setattr(dedup, "PAIR_GUARD_MIN_BYTES", 0)
+    monkeypatch.setenv("SPARK_GRAFT_PAIR_DISK_BUDGET", "1024")
     docs = spark.createDataFrame(
         [Row(doc_id=i, text="the quick fox jumps " + f"tail{i}")
          for i in range(200)]
@@ -258,9 +260,7 @@ def test_pair_disk_guard_fires_on_blast_corpus(spark):
     with pytest.raises(
         dedup.PairExplosionError, match="max_docs_per_shingle"
     ):
-        dedup.ngram_jaccard_dupes(
-            docs, n=3, threshold=0.5, disk_guard=True, pair_disk_budget=1024
-        ).count()
+        dedup.ngram_jaccard_dupes(docs, n=3, threshold=0.5).count()
     # minhash flavor: exact-duplicate texts collide in every band bucket
     dupes = spark.createDataFrame(
         [Row(doc_id=i, text="alpha beta gamma delta epsilon zeta")
@@ -269,13 +269,10 @@ def test_pair_disk_guard_fires_on_blast_corpus(spark):
     with pytest.raises(
         dedup.PairExplosionError, match="max_docs_per_band_key"
     ):
-        dedup.minhash_lsh_dupes(
-            dupes, jaccard_threshold=0.5, disk_guard=True,
-            pair_disk_budget=1024,
-        ).count()
+        dedup.minhash_lsh_dupes(dupes, jaccard_threshold=0.5).count()
 
 
-def test_pair_disk_guard_noop_on_fixture(spark, sf_correctness):
+def test_pair_disk_guard_noop_on_fixture(spark, sf_correctness, monkeypatch):
     """On the real fixtures the guard must be a pure no-op: default
     budget (free scratch disk), same rows as the unguarded plan, and the
     byte estimate far under budget. Also pins that an ACTIVE bucket cap
@@ -287,19 +284,18 @@ def test_pair_disk_guard_noop_on_fixture(spark, sf_correctness):
         (r.doc_a, r.doc_b)
         for r in dedup.ngram_jaccard_dupes(docs, n=3, threshold=0.5).collect()
     }
+    monkeypatch.setattr(dedup, "PAIR_GUARD_MIN_BYTES", 0)
     guarded = {
         (r.doc_a, r.doc_b)
-        for r in dedup.ngram_jaccard_dupes(
-            docs, n=3, threshold=0.5, disk_guard=True
-        ).collect()
+        for r in dedup.ngram_jaccard_dupes(docs, n=3, threshold=0.5).collect()
     }
     assert guarded == plain and plain
     sh = dedup.shingle_rows(docs, "text", "doc_id", 3)
-    est_all = dedup.pair_disk_guard(sh, ["shingle"], "max_docs_per_shingle")
+    est_all = dedup.pair_guard(sh, ["shingle"], "max_docs_per_shingle")
     small = sh.join(
         sh.groupBy("shingle").count().filter("count <= 2"), "shingle"
     )
-    est_capped = dedup.pair_disk_guard(
+    est_capped = dedup.pair_guard(
         small, ["shingle"], "max_docs_per_shingle"
     )
     assert 0 < est_capped < est_all
@@ -362,22 +358,24 @@ def test_minhash_cross_corpus_guard_caps_and_matches_duckdb(spark):
 
 
 def test_pair_disk_guard_fires_in_simhash(spark, monkeypatch):
-    """r9 advisory: the simhash_dupes disk_guard path (localCheckpoint +
-    band/key pricing) only activates at fixture scale via the suite
-    gate, so pin it at unit scale — identical docs share every band
-    bucket; a 1-byte env budget must fail fast naming the lever."""
+    """r9 advisory: the simhash_dupes guard path (localCheckpoint +
+    band/key pricing) only activates past PAIR_GUARD_MIN_BYTES of
+    input, so pin it at unit scale with the gate at 0 — identical docs
+    share every band bucket; a 1-byte env budget must fail fast naming
+    the lever."""
     import pytest as _pytest
 
     docs = spark.createDataFrame(
         [Row(doc_id=i, text="alpha beta gamma delta epsilon zeta")
          for i in range(10)]
     )
+    monkeypatch.setattr(dedup, "PAIR_GUARD_MIN_BYTES", 0)
     monkeypatch.setenv("SPARK_GRAFT_PAIR_DISK_BUDGET", "1")
     with _pytest.raises(dedup.PairExplosionError, match="band-key bucket cap"):
-        dedup.simhash_dupes(docs, max_hamming=3, disk_guard=True).count()
+        dedup.simhash_dupes(docs, max_hamming=3).count()
     monkeypatch.delenv("SPARK_GRAFT_PAIR_DISK_BUDGET")
     # default budget (free disk): guard is a no-op, pairs all surface
     assert (
-        dedup.simhash_dupes(docs, max_hamming=3, disk_guard=True).count()
+        dedup.simhash_dupes(docs, max_hamming=3).count()
         == 10 * 9 // 2
     )

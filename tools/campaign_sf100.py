@@ -28,7 +28,7 @@ Phases, each resumable from the state file in --workdir:
   3. oracle: JVM-free ``verify_local --oracle-only`` compares, ONE
      subprocess per query with a wall budget and a spill-disk free-space
      pre-check (pricing the twin's scratch the way the engine's
-     pair_disk_guard prices its own pair stages — the r10 ENOSPC death was
+     pair_guard prices its own pair stages — the r10 ENOSPC death was
      exactly a twin spilling into a disk something else was filling).
   4. tail: the minhash tail check (tools/verify_minhash_tail_sf100.py)
      as a recorded per-query mode — keep/clusters re-derived by an
@@ -308,7 +308,7 @@ def phase_oracle(sf_dir, workdir, state, plan, duckdb_mem, only, force):
         need = ov.get("min_free_gb", ORACLE_MIN_FREE_GB)
         free = _free_gb(spill)
         if free < need:
-            # admission control, the in-engine pair_disk_guard's analog:
+            # admission control, the in-engine pair_guard's analog:
             # refuse to start a twin the disk can't absorb.
             cur["result"] = f"disk-refused:{free:.0f}GB<{need}GB"
             print(f"[oracle] {name}: {cur['result']}")

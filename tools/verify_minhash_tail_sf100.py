@@ -54,7 +54,6 @@ def main() -> int:
     from nosql_based_business_intelligence_system_spark.queries.text_suite import (
         MINHASH_BAND_CAP,
         _docs,
-        _pair_guard_on,
     )
     from nosql_based_business_intelligence_system_spark.session import get_spark
     from tools.verify_local import table_digest
@@ -66,7 +65,6 @@ def main() -> int:
         _docs(spark, sf_dir),
         jaccard_threshold=0.5,
         max_docs_per_band_key=MINHASH_BAND_CAP,
-        disk_guard=_pair_guard_on(spark, sf_dir),
     ).select("doc_a", "doc_b")
     # ONE pipeline execution (r11 advice 2: count() + collect() re-ran the
     # full sf100 signature+banding pipeline twice — the only expensive
